@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from facebook_ads_bigquery_etl_spark.operators import dedup as dd  # noqa: E402
+from facebook_ads_bigquery_etl_spark.operators.materialize import query_scope  # noqa: E402
 from facebook_ads_bigquery_etl_spark.operators import similarity as sim  # noqa: E402
 from facebook_ads_bigquery_etl_spark.plans import QUERIES  # noqa: E402
 from facebook_ads_bigquery_etl_spark.plans.registry import load_tables  # noqa: E402
@@ -234,7 +235,12 @@ HEADLINE = [
 
 
 def _query(name):
-    return EXTRA.get(name) or QUERIES[name]
+    """The callable for ``name``. Registered queries enter their own
+    ``query_scope``; the EXTRA operator callables are wrapped in one
+    here, so every timed invocation frees the previous one's frames."""
+    if name in EXTRA:
+        return query_scope()(EXTRA[name])
+    return QUERIES[name]
 
 
 def main() -> None:

@@ -98,7 +98,6 @@ def with_global_rank(
     out_col: str = "global_rank",
     n_buckets: int | None = None,
     ascending: bool = True,
-    persist: bool = False,
 ) -> DataFrame:
     """Add the exact 1-based global rank by
     ``(value_col, *tiebreak_cols)`` (a TOTAL order — tiebreaks must
@@ -109,14 +108,9 @@ def with_global_rank(
     re-read-stable (concurrent writes, sampling) can grow a bucket
     between the counts collect and window time; that bucket's offset
     would be absent from the broadcast map, so the rank expression
-    raises at runtime instead of silently emitting null ranks. Pass
-    ``persist=True`` to pin ``df`` (MEMORY_AND_DISK) across the three
-    actions when the source is not deterministic — the caller owns
-    ``df.unpersist()`` after consuming the result."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    raises at runtime instead of silently emitting null ranks. A
+    caller with a non-deterministic source passes ``materialize(df)``
+    (operators/materialize), pinned across the three actions."""
     return _rank_with_total(
         df, value_col, tiebreak_cols, out_col, n_buckets, ascending
     )[0]
@@ -181,7 +175,7 @@ def _rank_with_total(
             F.concat(
                 F.lit(
                     "with_global_rank: bucket absent at count time "
-                    "(input not re-read-stable; pass persist=True): "
+                    "(input not re-read-stable; call materialize(df) first): "
                 ),
                 F.col("__bucket").cast("string"),
             )
@@ -220,7 +214,6 @@ def with_global_cumsum(
     out_col: str = "global_cumsum",
     n_buckets: int | None = None,
     ascending: bool = True,
-    persist: bool = False,
 ) -> DataFrame:
     """Exact running ``SUM(sum_col) OVER (ORDER BY value, *tiebreaks
     ROWS UNBOUNDED PRECEDING)`` without a single-partition sort: the
@@ -233,11 +226,8 @@ def with_global_cumsum(
     from a sequential pass by ulps (non-associative addition). Use an
     exactly-additive ``sum_col`` type (integer / decimal) when
     bit-parity with a sequential window or another engine matters;
-    the offsets and the output are cast to the aggregate's own type."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    the offsets and the output are cast to the aggregate's own type.
+    Same re-read-stability contract as :func:`with_global_rank`."""
     n = max(2, int(n_buckets)) if n_buckets is not None else _default_buckets(df)
     probes = [i / n for i in range(1, n)]
     cuts = sorted(set(df.approxQuantile(value_col, probes, 0.001)))
@@ -278,7 +268,7 @@ def with_global_cumsum(
             F.concat(
                 F.lit(
                     "with_global_cumsum: bucket absent at sum time "
-                    "(input not re-read-stable; pass persist=True): "
+                    "(input not re-read-stable; call materialize(df) first): "
                 ),
                 F.col("__bucket").cast("string"),
             )
@@ -308,7 +298,6 @@ def with_global_ntile(
     n_buckets: int | None = None,
     ascending: bool = True,
     small_input_rows: int = GLOBAL_RANK_SMALL_INPUT_ROWS,
-    persist: bool = False,
 ) -> DataFrame:
     """Exact ``NTILE(k) OVER (ORDER BY value, *tiebreaks)`` that never
     single-task-sorts a LARGE input. Dispatch is free — the total row
@@ -316,13 +305,8 @@ def with_global_ntile(
     ``small_input_rows`` the classic window form runs (one job, fastest
     at small scale); above it, the range-bucketed parallel form (two
     extra narrow passes buy a fully parallel sort). Both produce
-    identical assignments. ``persist=True`` pins ``df`` across the
-    count + rank actions for non-re-read-stable sources (caller owns
-    ``unpersist``)."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    identical assignments. Same re-read-stability contract as
+    :func:`with_global_rank`."""
     if small_input_rows > 0:
         total = df.count()
         if total == 0:
@@ -336,8 +320,7 @@ def with_global_ntile(
     # forced-parallel path (small_input_rows=0, every registered
     # corpus-grain ntile): the total comes out of the bucket-counts
     # action the rank operator runs anyway — no separate count() pass
-    # (r13 optimization; df already persisted above when requested —
-    # don't double-pin)
+    # (r13 optimization)
     ranked, total = _rank_with_total(
         df, value_col, tiebreak_cols, "__grank", n_buckets, ascending
     )

@@ -23,6 +23,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import pinned
+
 
 def count_min_sketch_of(df: DataFrame, col: str, eps: float, confidence: float, seed: int):
     """Build the corpus-wide sketch distributed (one pass, mergeable
@@ -63,8 +65,7 @@ def count_min_topk_audit(
     # narrow single-column frame — persist it once instead of running
     # the upstream tokenize+explode twice (~30% on the audit; in
     # production the exact branch disappears and with it this persist).
-    df = df.persist()
-    try:
+    with pinned(df):
         cms = count_min_sketch_of(df, col, eps, confidence, seed)
         bound = int(math.ceil(eps * cms.totalCount()))
         exact = (
@@ -79,8 +80,6 @@ def count_min_topk_audit(
             rows.append(
                 (r[col], r["n_exact"], est >= r["n_exact"], est <= r["n_exact"] + bound)
             )
-    finally:
-        df.unpersist()
     return spark.createDataFrame(
         rows, schema=f"{col} string, n_exact long, cms_lower_ok boolean, cms_upper_ok boolean"
     )

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators import casting as cst
-from ..operators.dedup import materialize_once
+from ..operators.materialize import materialize
 from ..operators.asof import asof_join
 from ..operators.exprs import knuth_bucket
 from ..operators.rank import with_global_ntile
@@ -1979,7 +1979,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage frame is consumed twice (the next stage's join + its
     # own count) — materialize the user-grain stage frames once (r13
     # optimization, guide §5: eager checkpoint, the honest-fastest
-    # barrier measured; the registry-persist variant paid semanticHash
+    # barrier measured; the r13 registry-persist variant paid plan
     # analysis + cache churn per run) so the events scan runs once per
     # stage instead of once per consumer chain; the frames are one
     # timestamp per surviving user, tiny at any scale. The view-stage
@@ -1989,14 +1989,14 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     p = (
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
@@ -2310,10 +2310,7 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev value straddling a rounding/bucket boundary could otherwise
     change buckets between the counts action and the window action
     (advisor r9 finding). All actions now read one pinned
-    materialization, matching customer_rfm_segments; the pin rides
-    the tracked barrier registry (advisor r10: a bare persist() here
-    leaked a CacheManager entry per run)."""
-    from ..operators.dedup import tracked_persist
+    materialization, matching customer_rfm_segments."""
     from ..operators.rank import with_global_cumsum
 
     orders = load_tables(spark, sf_dir, "orders")["orders"].withColumn(
@@ -2321,7 +2318,7 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         # input (r11 extremes sweep)
         "o_totalprice", cst.finite_or_null(F.col("o_totalprice"))
     )
-    per_cust = tracked_persist(
+    per_cust = materialize(
         orders.groupBy("o_custkey")
         .agg(
             F.round(F.sum("o_totalprice"), 2)
@@ -3165,7 +3162,7 @@ def copurchase_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select("l_orderkey", "l_partkey").distinct()
     baskets = b.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     n_ord = baskets.agg(F.count(F.lit(1)).alias("n"))
     item = (
         baskets.select(F.explode("ps").alias("l_partkey"))
@@ -3273,22 +3270,22 @@ def copurchase_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch replayed the full basket-pair generation from the base
     # scan — 44 parquet scans of lineitem and 68 exchanges in one plan
     # (r13 optimization, guide §5: reuse ≫ recompute). Materialize it
-    # once (eager checkpoint — measured faster than the registry
-    # persist, whose semanticHash analysis + columnar encode + cache
-    # churn cost more per run than the replay it saves at this frame
-    # size); every consumer then reads the materialized edge
+    # once (eager checkpoint — measured faster than the r13 registry
+    # persist, whose plan analysis + columnar encode + cache churn
+    # cost more per run than the replay it saves at this frame size);
+    # every consumer then reads the materialized edge
     # partitions. Same for the degree table, which is
     # consumed four times (two orientation sides, the rank map, the
     # wedge-count readout). At scale the edge list is the dominant
     # intermediate — recomputing it per branch is the textbook reuse
     # failure, not a local quirk.
-    e = e.transform(materialize_once)
+    e = materialize(e, eager=True)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select("v"))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     # orient: lower (degree, id) -> higher (degree, id)
@@ -3945,13 +3942,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the (metric DESC, custkey ASC) mixed-direction tie-break of
     the oracle exact. ``base`` is persisted because each score runs
     count + quantile + offset actions over it; the skinny
-    (custkey, score) frames join back on the unique customer key. The
-    pin rides the tracked barrier registry (advisor r10: bare
-    persist() leaked a CacheManager entry per run)."""
-    from ..operators.dedup import tracked_persist
-
+    (custkey, score) frames join back on the unique customer key."""
     orders = load_tables(spark, sf_dir, "orders")["orders"]
-    base = tracked_persist(
+    base = materialize(
         orders.groupBy("o_custkey").agg(
             F.datediff(
                 F.lit("1998-12-31").cast("date"),

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators import components as cc
 from ..operators import dedup as dd
-from ..operators.dedup import materialize_once
+from ..operators.materialize import materialize, pinned
 from ..operators import mixing as mx
 from ..operators import multimodal as mm
 from ..operators import packing as pk
@@ -199,10 +199,8 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= 8)
         .select("a_id", "b_id")
     )
-    # Tracked barrier, not a bare persist(): both audits consume the
-    # exact-pair frame, and the dedup barrier registry bounds the cache
-    # lifetime (a bare persist() here leaked an entry per run).
-    true_pairs = dd._barrier(dd.simhash_exact_pairs(docs, max_hamming=8))
+    # both audits consume the exact-pair frame
+    true_pairs = materialize(dd.simhash_exact_pairs(docs, max_hamming=8))
     audit = _pair_set_audit(
         found, true_pairs.select("a_id", "b_id"), recall_floor_pct=40
     )
@@ -575,8 +573,8 @@ def _ann_recall_audit(
     # reuse shape as the r13 materialize-once sites; the frame is
     # queries×k rows, tiny at any scale, while the replay it removes is
     # corpus-sized)
-    exact = materialize_once(
-        sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=k)
+    exact = materialize(
+        sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=k), eager=True
     )
     hits = (
         exact.select("query_id", "neighbor_id")
@@ -1796,30 +1794,29 @@ def dedup_keep_best_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count+sum readout into one action and the two directed exceptAll
     # counts into one tagged union (same multiset semantics, the tag
     # records which side each surplus row came from).
-    scale = dedup_keep_best_scale(spark, sf_dir).persist()
+    scale = dedup_keep_best_scale(spark, sf_dir)
     exact_edges = dd.jaccard_pairs(
         docs, text_col="text", threshold=0.7, ngram=3
     ).select("a_id", "b_id")
-    exact = _keep_best_over_edges(docs, exact_edges).persist()
-    # SUM over zero clusters reads back None; the oracle counts 0 over
-    # its empty reps frame (r10 empty sweep)
-    s_row = scale.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("cluster_size"), F.lit(0)).alias("cov"),
-    ).first()
-    n_clusters, docs_covered = s_row["n"], s_row["cov"]
-    d_row = (
-        scale.exceptAll(exact).select(F.lit(1).alias("s"))
-        .unionAll(exact.exceptAll(scale).select(F.lit(0).alias("s")))
-        .agg(
-            F.coalesce(F.sum("s"), F.lit(0)).alias("scale_only"),
-            F.coalesce(F.sum(1 - F.col("s")), F.lit(0)).alias("exact_only"),
+    exact = _keep_best_over_edges(docs, exact_edges)
+    with pinned(scale, exact):
+        # SUM over zero clusters reads back None; the oracle counts 0
+        # over its empty reps frame (r10 empty sweep)
+        s_row = scale.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("cluster_size"), F.lit(0)).alias("cov"),
+        ).first()
+        n_clusters, docs_covered = s_row["n"], s_row["cov"]
+        d_row = (
+            scale.exceptAll(exact).select(F.lit(1).alias("s"))
+            .unionAll(exact.exceptAll(scale).select(F.lit(0).alias("s")))
+            .agg(
+                F.coalesce(F.sum("s"), F.lit(0)).alias("scale_only"),
+                F.coalesce(F.sum(1 - F.col("s")), F.lit(0)).alias("exact_only"),
+            )
+            .first()
         )
-        .first()
-    )
     n_scale_only, n_exact_only = d_row["scale_only"], d_row["exact_only"]
-    scale.unpersist(blocking=False)
-    exact.unpersist(blocking=False)
     return spark.createDataFrame(
         [
             (
@@ -1909,26 +1906,25 @@ def _semantic_keep_best_audit(
     # optimization, guide §5.1)
     exact_edges = sim.embedding_dup_pairs(emb, threshold=0.4, exact=True).select(
         "a_id", "b_id"
-    ).persist()
-    n_vecs = emb.count()
-    members = (
-        exact_edges.select(F.col("a_id").alias("id"))
-        .union(exact_edges.select("b_id"))
-        .distinct()
-        .count()
     )
-    kept_exact = _semantic_kept_ids(emb, exact_edges).persist()
-    kept_scale = _semantic_kept_ids(emb, scale_edges).persist()
-    n_kept_exact = kept_exact.count()
-    n_kept_scale = kept_scale.count()
+    with pinned(exact_edges):
+        n_vecs = emb.count()
+        members = (
+            exact_edges.select(F.col("a_id").alias("id"))
+            .union(exact_edges.select("b_id"))
+            .distinct()
+            .count()
+        )
+        kept_exact = _semantic_kept_ids(emb, exact_edges)
+        kept_scale = _semantic_kept_ids(emb, scale_edges)
+        with pinned(kept_exact, kept_scale):
+            n_kept_exact = kept_exact.count()
+            n_kept_scale = kept_scale.count()
+            scale_only_edges = scale_edges.exceptAll(exact_edges).count()
+            inter = kept_exact.join(kept_scale, "kept_id", "semi").count()
     n_dropped = n_vecs - n_kept_exact
     n_clusters_multi = members - n_dropped
-    scale_only_edges = scale_edges.exceptAll(exact_edges).count()
-    inter = kept_exact.join(kept_scale, "kept_id", "semi").count()
     union = n_kept_exact + n_kept_scale - inter
-    kept_exact.unpersist(blocking=False)
-    kept_scale.unpersist(blocking=False)
-    exact_edges.unpersist(blocking=False)
     return spark.createDataFrame(
         [
             (
@@ -2211,7 +2207,7 @@ def doc_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, guide §5). The vocab broadcast join now lives in
     # the materialization pass — witnessed in
     # plans/r13/doc_perplexity_filter_before.txt.
-    wc = tok.groupBy("w").agg(F.count("*").alias("c")).transform(materialize_once)
+    wc = materialize(tok.groupBy("w").agg(F.count("*").alias("c")), eager=True)
     tot = wc.agg(F.sum("c").alias("t"))
     lp = wc.join(F.broadcast(tot)).select(
         "w", F.log(F.col("c") / F.col("t")).alias("logp")
@@ -2223,7 +2219,7 @@ def doc_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_tokens"),
             F.round(-F.avg("logp"), 4).alias("cross_entropy"),
         )
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     thr = per_doc.agg(F.round(F.avg("cross_entropy"), 4).alias("mean_ce"))
     return per_doc.join(F.broadcast(thr)).select(
         "doc_id",
@@ -3189,7 +3185,7 @@ def curation_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("digit_ratio"),
     )
-    m = m.transform(materialize_once)
+    m = materialize(m, eager=True)
     q = m.where(
         F.col("n_words").between(50, 100000)
         & F.col("mwl").between(2.0, 10.0)
@@ -3443,7 +3439,7 @@ def bloom_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once (eager checkpoint); the 100× stress already showed the hash
     # stage is the dominant term, so at scale the 3× replay is 3 full
     # corpus passes.
-    hashed = hashed.transform(materialize_once)
+    hashed = materialize(hashed, eager=True)
     bench = hashed.filter(F.col("doc_id") < 20)
     bench_bits = (
         bench.select(F.explode(F.array("b1", "b2", "b3")).alias("bit"))
@@ -3622,9 +3618,7 @@ def perplexity_curriculum_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = wc.join(F.broadcast(tot)).select(
         "w", F.log(F.col("c") / F.col("t")).alias("logp")
     )
-    # pin rides the tracked barrier registry (advisor r10: bare
-    # persist() leaked a CacheManager entry per run)
-    pd_ = dd.tracked_persist(
+    pd_ = materialize(
         tok.join(F.broadcast(lp), "w")
         .groupBy("doc_id")
         .agg(
@@ -4405,7 +4399,7 @@ def embedding_outlier_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, guide §5); the posexplode fan-out now lives in the
     # materialization pass — witnessed in
     # plans/r13/embedding_outlier_quarantine_before.txt
-    dist = dist.transform(materialize_once)
+    dist = materialize(dist, eager=True)
     thr = dist.groupBy("label").agg(
         F.round(F.avg("mdist") + 2 * F.stddev_pop("mdist"), 4).alias("cut")
     )
@@ -4544,17 +4538,17 @@ def minhash_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |A\B| + |B\A| = 0 is the same predicate.
     exact = dd.jaccard_pairs(
         docs, text_col="text", threshold=0.7, ngram=3
-    ).select("a_id", "b_id").persist()
+    ).select("a_id", "b_id")
     rows = []
-    for bands in (8, 16, 32):
-        got = dd.minhash_dup_pairs(
-            docs, threshold=0.7, num_perm=64, bands=bands, ngram=3
-        ).select("a_id", "b_id").persist()
-        n_pairs = got.count()
-        n_diff = exact.exceptAll(got).unionAll(got.exceptAll(exact)).count()
-        got.unpersist(blocking=False)
-        rows.append((bands, 64 // bands, n_pairs, n_diff == 0))
-    exact.unpersist(blocking=False)
+    with pinned(exact):
+        for bands in (8, 16, 32):
+            got = dd.minhash_dup_pairs(
+                docs, threshold=0.7, num_perm=64, bands=bands, ngram=3
+            ).select("a_id", "b_id")
+            with pinned(got):
+                n_pairs = got.count()
+                n_diff = exact.exceptAll(got).unionAll(got.exceptAll(exact)).count()
+            rows.append((bands, 64 // bands, n_pairs, n_diff == 0))
     return spark.createDataFrame(
         rows,
         "bands long, rows_per_band long, n_pairs long,"
@@ -5114,7 +5108,7 @@ def bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize once (eager checkpoint) — same 3-consumer replay as
     # bloom_decontaminate_13gram (r13 optimization, guide §5)
-    hashed = hashed.transform(materialize_once)
+    hashed = materialize(hashed, eager=True)
     bench = hashed.filter(F.col("doc_id") < 20)
     bench_bits = (
         bench.select(F.explode(F.array("b1", "b2", "b3")).alias("bit"))
@@ -5363,7 +5357,7 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plans/r13/ngram_novelty_scores_before.txt
     grams = docs.select(
         "doc_id", F.explode(let(tokens("text"), _shingle)).alias("g")
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     ref_grams = grams.filter(F.col("doc_id") % 7 < 2)
     n_ref = ref_grams.select("doc_id").distinct().count()
     ref = ref_grams.groupBy("g").agg(
@@ -5497,7 +5491,7 @@ def doc_kl_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, guide §5; same shape as trigram_lm_train)
     tc = (
         ref_tri.groupBy("a", "b", "c").agg(F.count("*").alias("c3"))
-    ).transform(materialize_once)
+    ).transform(materialize, eager=True)
     bc = tc.groupBy("a", "b").agg(F.sum("c3").alias("c2"))
     vocab = (
         docs.filter(F.col("doc_id") % 7 < 2)

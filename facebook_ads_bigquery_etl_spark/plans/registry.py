@@ -21,22 +21,32 @@ Cross-engine determinism rules used throughout the library:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators.materialize import query_scope
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and its oracle SQL) to the registry."""
+    """Decorator: add a query (and its oracle SQL) to the registry.
+    Each call runs in a ``query_scope``: its outermost entry frees the
+    frames the previous query materialized."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs):
+            with query_scope():
+                return fn(*args, **kwargs)
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return scoped
 
     return deco
 

@@ -34,7 +34,7 @@ from ..streaming import (
     user_profile_stateful,
     user_running_totals,
 )
-from ..operators.dedup import materialize_once
+from ..operators.materialize import materialize, pinned
 from ..operators.exprs import knuth_bucket
 from ..operators.integrity import round_double_sql
 from .registry import load_tables, register
@@ -1258,7 +1258,7 @@ def stream_partial_session_eviction(
     # order and the staged batch files stay byte-identical (r13
     # optimization, guide §5.1; the writes were already sequential, so
     # unlike a parallel-subtree query nothing loses concurrency here)
-    ev = ev.transform(materialize_once)
+    ev = materialize(ev, eager=True)
 
     src = tempfile.mkdtemp(prefix="partial_sess_src_")
     try:
@@ -1479,13 +1479,10 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist the day×type-grain frames so the published-FACT scan
         # + aggregation behind `derived` runs once per epoch, not twice
         # (the probe's only table-sized input).
-        pr = pr.persist()
-        derived = derived.persist()
-        torn = (
-            pr.exceptAll(derived).unionAll(derived.exceptAll(pr)).count()
-        )
-        pr.unpersist(blocking=False)
-        derived.unpersist(blocking=False)
+        with pinned(pr, derived):
+            torn = (
+                pr.exceptAll(derived).unionAll(derived.exceptAll(pr)).count()
+            )
         audit["epochs"] += 1
         audit["consistent"] &= torn == 0
 
@@ -1965,38 +1962,36 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         # fuse count-style readouts that share a scan into one agg
         # (count(lit(1)) ≡ count(); coalesced SUM keeps the
         # empty-probe 0).
-        fact = spark.read.parquet(fact_dir).persist()
-        index = spark.read.parquet(f"{work}/idx_v{state['version']}").persist()
-        rebuild = fact.select("d", bit("user_id").alias("bit")).distinct().persist()
-        diff = index.exceptAll(rebuild).unionAll(
-            rebuild.exceptAll(index)
-        ).count()
-        f_row = fact.agg(
-            F.min("user_id").alias("u"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        probe_u, n_fact_rows = f_row["u"], f_row["n"]
-        # kept as its own action: countDistinct skips NULL keys while
-        # distinct().count() keeps the NULL group — not provably the
-        # same readout; the scan behind it is the persisted fact
-        n_parts_total = fact.select("d").distinct().count()
-        probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
-        n_probed = index.filter(F.col("bit") == probe_bit).count()
-        t_row = (
-            fact.filter(F.col("user_id") == probe_u)
-            .groupBy("d")
-            .agg(F.count("*").alias("n"))
-            .agg(
-                F.count(F.lit(1)).alias("n_days"),
-                F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
+        fact = spark.read.parquet(fact_dir)
+        index = spark.read.parquet(f"{work}/idx_v{state['version']}")
+        rebuild = fact.select("d", bit("user_id").alias("bit")).distinct()
+        with pinned(fact, index, rebuild):
+            diff = index.exceptAll(rebuild).unionAll(
+                rebuild.exceptAll(index)
+            ).count()
+            f_row = fact.agg(
+                F.min("user_id").alias("u"),
+                F.count(F.lit(1)).alias("n"),
+            ).first()
+            probe_u, n_fact_rows = f_row["u"], f_row["n"]
+            # kept as its own action: countDistinct skips NULL keys while
+            # distinct().count() keeps the NULL group — not provably the
+            # same readout; the scan behind it is the persisted fact
+            n_parts_total = fact.select("d").distinct().count()
+            probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
+            n_probed = index.filter(F.col("bit") == probe_bit).count()
+            t_row = (
+                fact.filter(F.col("user_id") == probe_u)
+                .groupBy("d")
+                .agg(F.count("*").alias("n"))
+                .agg(
+                    F.count(F.lit(1)).alias("n_days"),
+                    F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
+                )
+                .first()
             )
-            .first()
-        )
-        n_true, n_found = t_row["n_days"], t_row["found"]
-        n_index_rows = index.count()
-        index.unpersist(blocking=False)
-        rebuild.unpersist(blocking=False)
-        fact.unpersist(blocking=False)
+            n_true, n_found = t_row["n_days"], t_row["found"]
+            n_index_rows = index.count()
         return spark.createDataFrame(
             [
                 (

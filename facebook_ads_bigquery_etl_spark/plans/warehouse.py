@@ -25,6 +25,7 @@ from ..operators.expectations import constraint_audit
 from ..operators.exprs import knuth_bucket
 from ..operators.incremental import finalize, merge_states, partial_state
 from ..operators.integrity import render_scaled_int_sql
+from ..operators.materialize import pinned
 from ..operators.profile import column_profile
 from ..operators.scd import scd2_merge, snapshot_diff
 from ..operators.skew import salted_join
@@ -1828,7 +1829,7 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             "event_id", "user_id", "value", F.col("ts").cast("date").alias("d")
         ),
         ["event_id"],
-    ).persist()
+    )
     in_window = F.col("d") < F.lit("2024-01-11").cast("date")
     updates = fact0.filter((F.col("event_id") % 7 == 0) & in_window).select(
         "event_id", "user_id", (F.col("value") * 2).alias("value"), "d"
@@ -1853,7 +1854,7 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         delta,
         keys=["event_id"],
         update_set={"value": F.col("s.value")},
-    ).drop("op").persist()
+    ).drop("op")
 
     bit = lambda c: knuth_bucket(c, 1024)  # noqa: E731
     index0 = fact0.select("d", bit("user_id").alias("bit")).distinct()
@@ -1864,42 +1865,39 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     kept = index0.join(F.broadcast(touched), "d", "anti")
     incr = kept.unionByName(refreshed)
     rebuild = merged.select("d", bit("user_id").alias("bit")).distinct()
-    incr = incr.persist()
-    # one action for the symmetric-difference cardinality instead of
-    # two — same exceptAll semantics, half the jobs (r13 optimization)
-    diff = incr.exceptAll(rebuild).unionAll(rebuild.exceptAll(incr)).count()
+    with pinned(fact0, merged, incr):
+        # one action for the symmetric-difference cardinality instead of
+        # two — same exceptAll semantics, half the jobs (r13 optimization)
+        diff = incr.exceptAll(rebuild).unionAll(rebuild.exceptAll(incr)).count()
 
-    probe_u = (
-        fact0.filter((F.col("event_id") % 5 == 0) & in_window)
-        .agg((F.min("user_id") + 1000000).alias("u"))
-        .first()["u"]
-    )
-    if probe_u is None:
-        # empty window: no inserted user exists to probe (r10 sweep)
-        n_probed = 0
-    else:
-        probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
-        n_probed = incr.filter(F.col("bit") == probe_bit).count()
-    # day count + event total over the probe truth in ONE action
-    # (count(lit(1)) ≡ the old truth.count(); coalesced SUM keeps the
-    # empty-probe 0 — r13 optimization)
-    t_row = (
-        merged.filter(F.col("user_id") == probe_u)
-        .groupBy("d")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
+        probe_u = (
+            fact0.filter((F.col("event_id") % 5 == 0) & in_window)
+            .agg((F.min("user_id") + 1000000).alias("u"))
+            .first()["u"]
         )
-        .first()
-    )
-    n_true, n_found = t_row["n_days"], t_row["found"]
-    n_parts_total = merged.select("d").distinct().count()
-    n_touched = touched.count()
-    n_index_rows = incr.count()
-    incr.unpersist(blocking=False)
-    merged.unpersist(blocking=False)
-    fact0.unpersist(blocking=False)
+        if probe_u is None:
+            # empty window: no inserted user exists to probe (r10 sweep)
+            n_probed = 0
+        else:
+            probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
+            n_probed = incr.filter(F.col("bit") == probe_bit).count()
+        # day count + event total over the probe truth in ONE action
+        # (count(lit(1)) ≡ the old truth.count(); coalesced SUM keeps the
+        # empty-probe 0 — r13 optimization)
+        t_row = (
+            merged.filter(F.col("user_id") == probe_u)
+            .groupBy("d")
+            .agg(F.count("*").alias("n"))
+            .agg(
+                F.count(F.lit(1)).alias("n_days"),
+                F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
+            )
+            .first()
+        )
+        n_true, n_found = t_row["n_days"], t_row["found"]
+        n_parts_total = merged.select("d").distinct().count()
+        n_touched = touched.count()
+        n_index_rows = incr.count()
     return spark.createDataFrame(
         [
             (
@@ -2637,18 +2635,15 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist the day-grain frames so the published-fact scan
         # behind `refreshed` (and the rollup read) runs once, and fold
         # the n_days readout into the persisted `stored` (r13)
-        refreshed = refreshed.persist()
-        stored = stored.persist()
-        n_days = stored.count()
-        # one action for the symmetric-difference cardinality instead
-        # of two — same exceptAll semantics (r13 optimization)
-        diff = (
-            refreshed.exceptAll(stored)
-            .unionAll(stored.exceptAll(refreshed))
-            .count()
-        )
-        refreshed.unpersist(blocking=False)
-        stored.unpersist(blocking=False)
+        with pinned(refreshed, stored):
+            n_days = stored.count()
+            # one action for the symmetric-difference cardinality instead
+            # of two — same exceptAll semantics (r13 optimization)
+            diff = (
+                refreshed.exceptAll(stored)
+                .unionAll(stored.exceptAll(refreshed))
+                .count()
+            )
         import os
 
         return spark.createDataFrame(

@@ -670,12 +670,12 @@ AUDITS: dict[str, tuple[str, list[str], list[str]]] = {
 }
 
 
-# PRE-MATERIALIZATION audits (r14, ADVICE r13): the materialize-once
-# barriers (operators/dedup.materialize_once) move a subtree's plan
-# text out of the final EXPLAIN, so the properties below — which the
-# r13 audit deferred to static plans/r13/*_before.txt snapshots CI
-# never regenerates — are asserted on the query built with
-# SPARK_GRAFT_NO_MATERIALIZE=1 (the barrier becomes a pass-through; the
+# PRE-MATERIALIZATION audits (r14, ADVICE r13): the reuse barriers
+# (operators/materialize.materialize) move a subtree's plan text out of
+# the final EXPLAIN, so the properties below — which the r13 audit
+# deferred to static plans/r13/*_before.txt snapshots CI never
+# regenerates — are asserted on the query built inside
+# materialize.disabled() (every barrier becomes a pass-through; the
 # full lineage stays visible). A regression INSIDE the materialization
 # pass (a lost pushdown, a broadcast degrading) now fails the audit
 # again. query → (why, [plan substrings that MUST be present]).
@@ -716,11 +716,10 @@ PRE_AUDITS: dict[str, tuple[str, list[str]]] = {
 def pre_materialization_plan(queries, name, spark, sf):
     """Build ``name`` with the reuse barriers disabled and return its
     formatted plan (see PRE_AUDITS)."""
-    os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
-    try:
+    from facebook_ads_bigquery_etl_spark.operators import materialize
+
+    with materialize.disabled():
         return plan_of(queries[name](spark, sf))
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_MATERIALIZE", None)
 
 
 def plan_of(df) -> str:
@@ -780,7 +779,7 @@ def main() -> int:
     out.append(
         "Properties the materialize-once barriers move out of the final "
         "plan, asserted on the query built with "
-        "`SPARK_GRAFT_NO_MATERIALIZE=1` (full lineage visible)."
+        "`materialize.disabled()` (full lineage visible)."
     )
     out.append("")
     for name, (why, must) in PRE_AUDITS.items():

@@ -25,7 +25,7 @@ EVDIR = "/tmp/spark-events-profile"
 def _bench_query(name):
     import bench
 
-    return bench.EXTRA.get(name) or bench.QUERIES[name]
+    return bench._query(name)
 
 
 def main() -> None:

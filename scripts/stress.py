@@ -139,37 +139,6 @@ PROBES = [
     "perplexity_curriculum_mix",    # doc-grain parallel ntile + LM scoring
 ]
 
-# Scale-path forms probed instead of their registered oracle-audit
-# twins (same reasoning as bench.py EXTRA): the registered
-# dedup_keep_best clusters on the EXACT posting-join edge set so DuckDB
-# can recompute every cluster; that baseline is quadratic in
-# hot-shingle document frequency by construction (measured 38× at 10×
-# data — the probe that prompted this split). The deployable form
-# clusters on MinHash-LSH edges.
-
-
-def _extra(name):
-    if name == "dedup_keep_best_op":
-        from facebook_ads_bigquery_etl_spark.plans.llm import (
-            dedup_keep_best_scale,
-        )
-
-        return dedup_keep_best_scale
-    if name == "semantic_dedup_op":
-        from facebook_ads_bigquery_etl_spark.plans.llm import (
-            semantic_dedup_scale,
-        )
-
-        return semantic_dedup_scale
-    if name == "semantic_dedup_ivf_op":
-        from facebook_ads_bigquery_etl_spark.plans.llm import (
-            semantic_dedup_ivf_scale,
-        )
-
-        return semantic_dedup_ivf_scale
-    return None
-
-
 def synthesize(spark) -> None:
     if os.path.exists(os.path.join(OUT, "_DONE")):
         return
@@ -205,7 +174,7 @@ def timed(fn, *args) -> float:
 
 
 def main() -> None:
-    from facebook_ads_bigquery_etl_spark.plans import QUERIES
+    import bench
     from facebook_ads_bigquery_etl_spark.session import get_spark
 
     spark = get_spark("stress")
@@ -217,7 +186,9 @@ def main() -> None:
     for name in PROBES:
         if only and name not in only:
             continue
-        q = _extra(name) or QUERIES[name]
+        # bench._query: the *_op names are bench.EXTRA's scale-path
+        # forms, probed instead of their registered oracle-audit twins
+        q = bench._query(name)
         q(spark, "/root/testdata/sf0.001").collect()  # JIT/codegen warmup
         base = min(timed(q, spark, SRC) for _ in range(2))
         big = min(timed(q, spark, OUT) for _ in range(2))

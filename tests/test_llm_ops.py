@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from facebook_ads_bigquery_etl_spark.operators import dedup as dd
+from facebook_ads_bigquery_etl_spark.operators import materialize as mz
 from facebook_ads_bigquery_etl_spark.operators import packing as pk
 from facebook_ads_bigquery_etl_spark.operators import similarity as sim
 from facebook_ads_bigquery_etl_spark.operators.text import with_fingerprint, with_lang_id
@@ -693,12 +694,14 @@ class TestDocChunking:
 
 
 class TestBarrierCacheHygiene:
-    """The dedup family's materialization barriers used to be bare
-    ``persist()`` calls nobody ever unpersisted — every dedup/shingle
-    query leaked a CacheManager entry for the session's lifetime. They
-    now run through a tracked registry: LRU-capped (steady-state bleed
-    is bounded at _BARRIER_CAP small frames no matter how many queries
-    run) with ``release_caches()`` for full teardown."""
+    """Every persist / checkpoint goes through operators/materialize:
+    a materialized frame lives until the next outermost query scope
+    starts, and a ``pinned`` frame until its ``with`` block exits —
+    nothing leaks for the session's lifetime."""
+
+    @staticmethod
+    def _n_stored(spark):
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
     def test_spread_still_widens_to_default_parallelism(self, spark, docs):
         spread = dd._spread(docs)
@@ -708,115 +711,145 @@ class TestBarrierCacheHygiene:
         )
 
     def test_registry_is_capped_and_release_empties_everything(self, spark, docs):
-        dd.release_caches()
+        """Repeated invocations hold at most ONE invocation's frames:
+        each scope entry frees its predecessor's."""
+        mz.release_caches()
         sc = spark.sparkContext
         baseline = sc._jsc.sc().getPersistentRDDs().size()
-        for _ in range(dd._BARRIER_CAP + 3):  # > cap ⇒ eviction engages
-            dd.minhash_dup_pairs(docs, threshold=0.7).count()
-        assert len(dd._BARRIERS) <= dd._BARRIER_CAP
-        released = dd.release_caches()
-        assert released > 0 and not dd._BARRIERS
+        per_invocation = set()
+        for _ in range(4):
+            with mz.query_scope():
+                dd.minhash_dup_pairs(docs, threshold=0.7).count()
+                per_invocation.add(len(mz._live))
+        assert len(per_invocation) == 1 and per_invocation.pop() > 0
+        released = mz.release_caches()
+        assert released > 0 and not mz._live
         # nothing this sweep persisted outlives the release
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert sc._jsc.sc().getPersistentRDDs().size() <= baseline
 
     def test_evicted_barrier_still_computes_correctly(self, spark, docs):
-        """Evicting a barrier before its consumer runs must only cost
-        recompute, never correctness."""
+        """Freeing a lazy barrier before its consumer runs must only
+        cost recompute, never correctness."""
         mh = dd.minhash_dup_pairs(docs, threshold=0.7)
-        dd.release_caches()  # evict BEFORE the action
+        mz.release_caches()  # evict BEFORE the action
         expect = {(r["a_id"], r["b_id"]) for r in dd.minhash_dup_pairs(docs, 0.7).collect()}
         got = {(r["a_id"], r["b_id"]) for r in mh.collect()}
         assert got == expect and got
 
     def test_alias_twin_barriers_keep_their_own_column_names(self, spark, docs):
-        """semanticHash canonicalizes aliases away, so two queries
-        computing the same frame under DIFFERENT output names hash
-        identically; the registry must not hand the first twin's frame
-        (and column names) to the second (r13: doc_perplexity_filter's
-        `cross_entropy` vs perplexity_curriculum_mix's `ce` collided
-        and every downstream reference to `ce` failed analysis)."""
-        from pyspark.sql import functions as F
-
-        dd.release_caches()
-        a = dd._barrier(
+        """Two frames computing the same plan under DIFFERENT output
+        names each keep their own names (r13: doc_perplexity_filter's
+        `cross_entropy` vs perplexity_curriculum_mix's `ce`)."""
+        a = mz.materialize(
             docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
         )
-        b = dd._barrier(
+        b = mz.materialize(
             docs.groupBy("lang").agg(F.count("*").alias("cnt"))
         )
         assert a.columns == ["lang", "n_docs"]
         assert b.columns == ["lang", "cnt"]
         # both stay consumable under their own names
         assert a.select("n_docs").count() == b.select("cnt").count()
-        dd.release_caches()
+        mz.release_caches()
 
     def test_alias_twin_registration_retires_the_armed_twin(self, spark, docs):
-        """Registering an alias twin (same semanticHash, different
-        column names) must RETIRE the earlier twin's registry entry —
-        an armed InMemoryRelation the new persist() would no-op
-        against via sameResult, serving invocation N the data
-        invocation N-1 materialized (r14, ADVICE r13)."""
-        from pyspark.sql import functions as F
+        """The next invocation must read NO InMemoryRelation the
+        previous one armed — not even an alias twin's, which a new
+        persist() would match via sameResult and serve invocation N
+        the data invocation N-1 computed (the bench-honesty rule)."""
+        cm = spark._jsparkSession.sharedState().cacheManager()
 
-        dd.release_caches()
-        a = dd._barrier(docs.groupBy("lang").agg(F.count("*").alias("n_docs")))
-        a.count()  # arm the first twin's cache
-        assert len(dd._BARRIERS) == 1
-        b = dd._barrier(docs.groupBy("lang").agg(F.count("*").alias("cnt")))
-        # one live registration: the armed twin was popped + unpersisted
-        assert len(dd._BARRIERS) == 1
-        assert next(iter(dd._BARRIERS.values())) is b
-        # the retired twin still computes (recompute path, never wrong)
-        assert a.count() == b.count()
-        dd.release_caches()
+        def armed(df):
+            cached = cm.lookupCachedData(df._jdf).get()
+            return cached.cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+        with mz.query_scope():
+            a = mz.materialize(docs.groupBy("lang").agg(F.count("*").alias("n_docs")))
+            a.count()
+            assert armed(a)
+        with mz.query_scope():
+            assert cm.isEmpty()
+            b = mz.materialize(docs.groupBy("lang").agg(F.count("*").alias("cnt")))
+            assert not armed(b)
+            # the retired twin still computes (recompute path, never wrong)
+            assert a.count() == b.count()
+        mz.release_caches()
 
     def test_tracked_checkpoint_frees_previous_invocation_blocks(
         self, spark, docs
     ):
-        """Re-checkpointing the same plan (the same query invoked
-        again) must free the PREVIOUS invocation's localCheckpoint
-        blocks instead of leaking them for the session lifetime (r14,
-        ADVICE r13: each bench iteration abandoned its predecessor's
-        MEMORY_AND_DISK blocks)."""
-        from pyspark.sql import functions as F
+        """Entering the next outermost registered query frees the
+        previous invocation's checkpoint blocks and cached frames:
+        RDD storage returns to its baseline (ADVICE r13: each bench
+        iteration abandoned its predecessor's blocks)."""
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
 
-        dd.release_caches()
-        sc = spark.sparkContext
+        mz.release_caches()
+        baseline = self._n_stored(spark)
+        with mz.query_scope():
+            frame = docs.groupBy("lang").agg(F.count("*").alias("n"))
+            c = mz.materialize(frame, eager=True)
+            lazy = mz.materialize(docs.groupBy("doc_id").count())
+            c.collect()
+            lazy.count()
+            assert self._n_stored(spark) == baseline + 2
+        QUERIES["revenue_by_nation"](spark, SF_SMOKE)
+        assert self._n_stored(spark) == baseline
 
-        def n_stored():
-            return len(sc._jsc.sc().getRDDStorageInfo())
+    def test_same_plan_eager_frames_are_both_readable(self, spark, docs):
+        """Two live checkpoints of the SAME plan in one invocation are
+        independent: materializing the second must not free the first
+        (ADVICE r14: the linalg moment frames crashed with
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+        with mz.query_scope():
+            c1 = mz.materialize(docs.groupBy("lang").count(), eager=True)
+            c2 = mz.materialize(docs.groupBy("lang").count(), eager=True)
+            rows1 = sorted(map(tuple, c1.collect()))
+            assert rows1 and rows1 == sorted(map(tuple, c2.collect()))
+        mz.release_caches()
 
-        baseline = n_stored()
+    def test_nested_registered_query_keeps_outer_frames(self, spark, docs):
+        """A registered query called from inside another joins the
+        outer invocation: the outer query's checkpoints stay live."""
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+
+        with mz.query_scope():
+            outer = mz.materialize(docs.groupBy("lang").count(), eager=True)
+            n_live = len(mz._live)
+            QUERIES["revenue_by_nation"](spark, SF_SMOKE).collect()
+            assert len(mz._live) == n_live
+            assert outer.count() > 0
+        mz.release_caches()
+
+    def test_pinned_frees_on_normal_and_exception_path(self, spark, docs):
+        frame = docs.groupBy("lang").count()
+        with mz.pinned(frame):
+            assert frame.is_cached
+            frame.count()
+        assert not frame.is_cached
+        with pytest.raises(RuntimeError):
+            with mz.pinned(frame):
+                assert frame.is_cached
+                raise RuntimeError("consumer failed")
+        assert not frame.is_cached
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.lookupCachedData(frame._jdf).isEmpty()
+
+    def test_materialize_is_a_passthrough_under_disabled(self, spark, docs):
+        """``disabled()`` (plan audits) makes materialize a no-op so the
+        pre-materialization physical shape stays assertable; a nested
+        ``disabled()`` leaves the outer state in force on exit."""
         frame = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        c1 = dd.tracked_local_checkpoint(frame)
-        assert n_stored() == baseline + 1
-        rows1 = c1.collect()
-        # invocation 2 of the same plan: blocks stay bounded at one
-        c2 = dd.tracked_local_checkpoint(
-            docs.groupBy("lang").agg(F.count("*").alias("n"))
-        )
-        assert n_stored() == baseline + 1
-        assert sorted(map(tuple, c2.collect())) == sorted(map(tuple, rows1))
-        released = dd.release_caches()
-        assert released >= 1 and n_stored() == baseline
-
-    def test_materialize_once_is_a_passthrough_under_audit_switch(
-        self, spark, docs, monkeypatch
-    ):
-        """SPARK_GRAFT_NO_MATERIALIZE (plan audits / A/B measurement)
-        must make the plan-level reuse barrier a no-op so the
-        pre-materialization physical shape stays assertable."""
-        from pyspark.sql import functions as F
-
-        frame = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        monkeypatch.setenv(dd._NO_MATERIALIZE_ENV, "1")
-        assert dd.materialize_once(frame) is frame
-        monkeypatch.delenv(dd._NO_MATERIALIZE_ENV)
-        out = dd.materialize_once(frame)
+        with mz.disabled():
+            with mz.disabled():
+                assert mz.materialize(frame, eager=True) is frame
+            assert mz.materialize(frame, eager=True) is frame
+            assert mz.materialize(frame) is frame
+        out = mz.materialize(frame, eager=True)
         assert out is not frame  # checkpointed
         assert out.count() == frame.count()
-        dd.release_caches()
+        mz.release_caches()
 
 
 class TestPrefixFilterJoin:

@@ -1208,16 +1208,20 @@ class TestGlobalRankWithoutSinglePartition:
         ).collect()
         assert [(r["id"], r["cum"]) for r in rows] == [(1, 5)]
 
-    def test_persist_flag_pins_input_and_ranks_stay_exact(self, spark):
-        """persist=True (advisor r8: non-re-read-stable sources) must
-        pin the input across the operator's three actions and produce
-        the same exact total ranking."""
+    def test_materialized_input_ranks_stay_exact(self, spark):
+        """A materialized input (advisor r8: non-re-read-stable
+        sources) stays pinned across the operator's three actions and
+        produces the same exact total ranking."""
         from facebook_ads_bigquery_etl_spark.operators import rank
+        from facebook_ads_bigquery_etl_spark.operators.materialize import (
+            materialize,
+            release_caches,
+        )
 
         df = self._orders(spark)
         n = df.count()
         ranked = rank.with_global_rank(
-            df, "o_totalprice", ["o_orderkey"], persist=True
+            materialize(df), "o_totalprice", ["o_orderkey"]
         )
         try:
             rs = ranked.select("global_rank").collect()
@@ -1229,7 +1233,7 @@ class TestGlobalRankWithoutSinglePartition:
                 ranked._jdf.queryExecution().toString()
             )
         finally:
-            spark.catalog.clearCache()
+            release_caches()
 
     def test_missing_bucket_offset_raises_not_null(self, spark):
         """The broadcast offset map covers every bucket seen at count

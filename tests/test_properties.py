@@ -588,11 +588,13 @@ def test_bench_line_tail_recoverable():
     first. Reconstructs bench.py's exact line shape from the committed
     r13 per-family history and asserts tail-recoverability."""
     import json
+    import os
     import re
 
     import bench
 
-    with open("/root/repo/bench_full_r13.json") as fh:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "bench_full_r13.json")) as fh:
         hist = json.load(fh)["queries"]
     # every headline family present, mirroring main()'s `times` map
     times = {name: float(hist[name]) for name in bench.HEADLINE}
@@ -620,3 +622,24 @@ def test_bench_line_tail_recoverable():
     parsed = json.loads(line)
     assert set(parsed) == {"metric", "unit", "queries", "value", "sf"}
     assert parsed["unit"] == "sec" and len(parsed["queries"]) == len(times)
+
+
+def test_materialize_is_the_only_persist_site():
+    """Every persist / checkpoint / free in the package goes through
+    operators/materialize.py, whose scopes bound each frame's lifetime;
+    no lifetime may again hang on a plan-hash key."""
+    import pathlib
+    import re
+
+    import facebook_ads_bigquery_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = root / "operators" / "materialize.py"
+    raw = re.compile(r"\.(persist|localCheckpoint|unpersist)\(|\.cache\(\)")
+    offenders = [
+        f"{path.relative_to(root)}:{no}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "semanticHash" in line or (path != allowed and raw.search(line))
+    ]
+    assert not offenders, "\n".join(offenders)
