@@ -22,6 +22,7 @@ scripts/round_sites_classified.json `r13_class_b_decisions`.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2392,14 +2393,14 @@ def lang_quality_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard way to summarize heavy-tailed length/quality
     distributions (arithmetic means are outlier-dominated)."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType passed explicitly: this module uses postponed
-    # annotation evaluation (``from __future__ import annotations``),
-    # which turns the (Series -> float) hints pandas_udf would infer
-    # GROUPED_AGG from into plain strings it refuses.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def log_mean(v):
+    # GROUPED_AGG is inferred from the (Series -> float) hints. Under
+    # this module's postponed annotations they are strings, which
+    # pandas_udf resolves against the module globals — hence the
+    # module-level ``pd``.
+    @pandas_udf("double")
+    def log_mean(v: pd.Series) -> float:
         return float(np.log(v.to_numpy(dtype=np.float64)).mean())
 
     # NULL lang is not a language group (and the broadcast join back
@@ -2682,9 +2683,8 @@ def compression_ratio_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.functions import pandas_udf
 
-    # no type hints on purpose: this module's postponed annotation
-    # evaluation turns them into strings pandas_udf can't infer from
-    # (same constraint as lang_quality_geomean's GROUPED_AGG)
+    # no type hints: a hint-less pandas_udf is the default SCALAR
+    # (Series -> Series) kind
     @pandas_udf("double")
     def ratio(s):
         # NULL payload → NULL ratio (never crash): corrupt/absent text

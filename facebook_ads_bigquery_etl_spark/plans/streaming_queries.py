@@ -801,8 +801,10 @@ def stream_atomic_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fresh checkpoint — the at-least-once redelivery worst case), and
     the row count must not move; then the fragmented table is
     compacted through the ATOMIC staged-commit protocol (journal +
-    rename swap, sinks.compact_partitions_atomic) down to one file
-    per partition with no staging debris. This is the reference's
+    rename swap; sinks.compact_partitions_atomic is a one-table
+    publish through the same staged commit as the streaming
+    two-table publish) down to one file per partition with no
+    staging debris. This is the reference's
     daily-cron ingest (README.md:57, main.py:86-89) upgraded to
     exactly-once + crash-safe maintenance, proven as one driver row."""
     import os

@@ -1612,7 +1612,7 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             crashed = True
         sinks._CRASH_HOOK = old_hook
         n_crashed = sinks.read_published_or_empty(spark, table, like=df).count()
-        report = sinks.recover_compaction(table, stale_after_s=0.0)
+        report = sinks.recover_table(table, stale_after_s=0.0)
         n_after = sinks.read_published_or_empty(spark, table, like=df).count()
         import os
 
@@ -2596,7 +2596,7 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         f2, r2 = gen(2)
 
         def crash(point: str) -> None:
-            if point == "multi_table_done:t0":
+            if point == "swapped:t0":
                 raise RuntimeError("injected crash: multi_table_swap_audit")
 
         sinks._CRASH_HOOK = crash
@@ -2616,7 +2616,7 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, roll_t, like=r2
             ).collect()
         }
-        report = sinks.recover_multi_swap(fact_t, stale_after_s=0.0)
+        report = sinks.recover_table(fact_t, stale_after_s=0.0)
 
         fact_df = sinks.read_published_or_empty(spark, fact_t, like=f2)
         # row count + recovered total in ONE action (r13 optimization)

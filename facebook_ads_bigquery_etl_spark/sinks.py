@@ -20,6 +20,7 @@ overwrite is atomic per partition directory.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -27,7 +28,8 @@ import shutil
 import threading
 import time
 import uuid
-from typing import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -164,8 +166,8 @@ def compact_partitions(
     partition half-replaced (round-3 verdict). Data lands in a hidden
     ``_compact/<run>/`` staging tree first; live partitions are only
     touched by directory renames after the full staged write, and a
-    journaled :func:`recover_compaction` rolls any interrupted run
-    forward or back before the table is next touched.
+    journaled :func:`recover_table` rolls any interrupted run forward
+    or back before the table is next touched.
 
     Only schemes WITHOUT atomic rename (``s3a://``, ``gs://`` …) fall
     back to the in-place read → dynamic-partition-overwrite pattern,
@@ -198,36 +200,53 @@ def compact_partitions(
     )
 
 
-# -- atomic staged compaction -------------------------------------------------
+# -- staged commit ------------------------------------------------------------
 #
-# A hand-rolled two-phase commit with stdlib primitives, for local/HDFS
+# Every atomic write below — a compaction (one table whose frame is a
+# re-read of itself) and an N-table publish (fact + rollup must move
+# together: a reader that joins them must never converge onto mixed
+# generations) — is ONE hand-rolled two-phase commit, for local/HDFS
 # style filesystems where directory rename is an atomic metadata op.
 # (On object stores without atomic rename you'd reach for a table
 # format — Delta/Iceberg manifest commits; this module demonstrates the
-# identical semantics without one.) Layout inside the table directory:
+# identical semantics without one.) A run is homed under its PRIMARY
+# target, the lexicographically first path, so every writer and every
+# recovery picks the same home. Layout:
 #
-#   <path>/_compact/<run_id>/data/date=*/   staged compacted output
-#   <path>/_compact/<run_id>/journal.json   {"state": "staged", parts}
-#   <path>/_compact/<run_id>/trash/date=*/  displaced live partitions
+#   <primary>/_compact/<run>/journal.json        {"state", "tables"}
+#   <primary>/_compact/<run>/t<i>/data/date=*/   staged output, table i
+#   <primary>/_compact/<run>/t<i>/trash/date=*/  displaced live partitions
+#   <target>/_compact/intent_<run>.json          {"primary", "run"}
+#   <target>/_compact/_lock                      the table's lease
 #
 # Everything under ``_compact`` is invisible to readers: Spark's file
-# index skips paths whose name starts with '_' or '.'. Protocol:
+# index skips paths whose name starts with '_' or '.'. Protocol, under
+# every target's lease (taken in sorted order — no lock-order inversion
+# against another writer — and heartbeated for the whole run):
 #
-#   1. WRITE   staged output for every partition (live tree untouched)
-#   2. JOURNAL an atomic intent record (temp file + os.replace)
-#   3. SWAP    per partition: live -> trash, staged -> live (renames)
-#   4. COMMIT  journal state -> committed, then delete the run dir
+#   0. RECOVER every target once (recover_table), then build the frames
+#   1. MARK    an intent marker under each non-primary target
+#   2. WRITE   staged output for every table (live trees untouched)
+#   3. JOURNAL an atomic intent record (temp file + rename): the single
+#              commit point for the WHOLE set
+#   4. SWAP    per table, per partition: live -> trash, staged -> live
+#   5. COMMIT  journal state -> committed, then delete run dir + markers
 #
-# Crash before 2 → recovery rolls BACK (deletes the orphan staging
-# tree; live table bit-identical). Crash during 3/4 → the journal
-# names every partition, so recovery rolls FORWARD deterministically:
-# each partition is in exactly one of three states (not yet swapped /
-# live missing mid-swap / swapped), all distinguishable from which of
-# (staged, live, trash) directories exist. Re-running recovery is
-# idempotent.
+# Crash before 3 → recovery rolls every table BACK (deletes the orphan
+# staging tree; live tables bit-identical). Crash during 4/5 → the
+# journal names every partition of every table, so recovery rolls
+# FORWARD deterministically: each partition is in exactly one of three
+# states (not yet swapped / live missing mid-swap / swapped), all
+# distinguishable from which of (staged, live, trash) directories
+# exist. Re-running recovery is idempotent. The swap phase is
+# convergent, not isolated: a reader racing it can transiently observe
+# table A new + table B old, but after recovery both are new — the
+# window is O(#partitions) renames, not O(data).
 
 # Test seam: called with a named crash point; tests raise from it to
-# simulate a kill at that exact moment.
+# simulate a kill at that exact moment. The points, in protocol order:
+# "staged", "journaled", "mid_swap:t<i>:<partition>" (live moved to
+# trash, staged not yet installed), "swapped:t<i>", "committed".
 _CRASH_HOOK: Callable[[str], None] = lambda point: None
 
 # A lease (not just a lock): a holder that crashes leaves the file
@@ -601,11 +620,6 @@ def _path_ops(path: str) -> "tuple[object, str]":
     return _hadoop_ops(path), path
 
 
-def _lease_path(path: str) -> str:
-    ops, p = _path_ops(path)
-    return ops.join(ops.join(p, "_compact"), "_lock")
-
-
 def _break_stale_lease(
     lease: str, stale_after_s: float, ops=None
 ) -> None:
@@ -756,14 +770,15 @@ def compact_partitions_atomic(
     fmt: str = "parquet",
     max_records_per_file: int | None = None,
 ) -> None:
-    """Staged, journaled, crash-safe compaction (protocol above).
+    """Staged, journaled, crash-safe compaction: a one-table publish
+    (protocol above) whose frame is the table's own committed content.
 
-    The distributed write (step 1) is the only data-sized cost and
+    The distributed write (step 2) is the only data-sized cost and
     runs entirely against the hidden staging tree; the commit (steps
-    2-4) is O(#partitions) directory renames. A crash at ANY point
+    3-5) is O(#partitions) directory renames. A crash at ANY point
     leaves the table either bit-identical to the pre-compaction state
     or recoverable to the post-compaction state by
-    :func:`recover_compaction` — never half-replaced.
+    :func:`recover_table` — never half-replaced.
 
     Runs on local paths (stdlib fast path) and on any Hadoop
     FileSystem with atomic rename — hdfs://, file://, abfs(s)://
@@ -776,88 +791,256 @@ def compact_partitions_atomic(
     would otherwise be rolled back mid-write by this run's opening
     recovery); a crashed holder's lease goes stale after
     :data:`COMPACTION_LEASE_STALE_S` and is broken automatically."""
-    try:
-        ops, path = _path_ops(path)
-    except _FsUnavailable as e:
-        raise ValueError(
-            f"compact_partitions_atomic requires a local path or an "
-            f"atomic-rename filesystem, got {path!r}: {e}. "
-            "Use compact_partitions (Spark-write fallback) or a table format."
-        ) from e
-    lease = _acquire_compaction_lease(path)
-    try:
-        with _LeaseHeartbeat(lease, ops=ops):
-            _compact_under_lease(
-                spark,
-                path,
-                ops,
-                partition_field=partition_field,
-                clustering_fields=clustering_fields,
-                fmt=fmt,
-                max_records_per_file=max_records_per_file,
-            )
-    finally:
-        _release_compaction_lease(path)
 
+    def build(paths: list[str]) -> list[DataFrame] | None:
+        # A table with NO committed partitions (first publish not
+        # landed, or every partition retention-purged / an empty
+        # upstream day) has nothing to compact — publish nothing
+        # instead of crashing on schema inference over zero parquet
+        # footers. Recovery already ran, so crashed-run debris is
+        # resolved either way (r10 empty sweep).
+        if not has_published_data(paths[0], partition_field):
+            return None
+        return [spark.read.format(fmt).load(paths[0])]
 
-def _compact_under_lease(
-    spark: SparkSession,
-    path: str,
-    ops,
-    partition_field: str,
-    clustering_fields: list[str] | None,
-    fmt: str,
-    max_records_per_file: int | None,
-) -> None:
-    # Holding the lease, any journal-less run dir is a crashed
-    # run's debris, not a live writer → recover may roll it back
-    # regardless of age (stale_after_s=0). Multi-table debris homed
-    # under this table (it was some crashed publish's primary) is
-    # resolved first — at minimum THIS table's pending swaps finish
-    # (we hold its lease), so the compaction below reads a fully
-    # published tree and can't later be rolled-forward-over.
-    recover_multi_swap(
-        path, partition_field, stale_after_s=0.0, held_paths=(path,)
-    )
-    recover_compaction(path, partition_field, stale_after_s=0.0)
-
-    # A table with NO committed partitions (first publish not landed,
-    # or every partition retention-purged / an empty upstream day) has
-    # nothing to compact — return instead of crashing on schema
-    # inference over zero parquet footers. Recovery above still ran,
-    # so crashed-run debris is resolved either way (r10 empty sweep).
-    if not _partition_dirs(path, partition_field, ops):
-        return
-
-    run_id = uuid.uuid4().hex[:12]
-    run_dir = ops.join(ops.join(path, "_compact"), run_id)
-    data_dir = ops.join(run_dir, "data")
-    ops.mkdirs(ops.join(run_dir, "trash"))
-
-    # 1. WRITE: full staged output; the live tree is only read.
-    df = spark.read.format(fmt).load(path)
-    write_day_partitioned(
-        df,
-        data_dir,
-        partition_field=partition_field,
+    _publish(
+        spark,
+        "compact_partitions_atomic",
+        [path],
+        build,
+        partition_field,
+        fmt,
         clustering_fields=clustering_fields,
-        mode="overwrite",
-        fmt=fmt,
         max_records_per_file=max_records_per_file,
     )
+
+
+def publish_tables_atomic(
+    spark: SparkSession,
+    writes: "list[tuple[DataFrame, str]]",
+    partition_field: str = "date",
+    fmt: str = "parquet",
+) -> None:
+    """Stage and atomically publish N (DataFrame → table path) writes
+    under one journal (protocol above). Local paths or one
+    atomic-rename filesystem (same constraint, same reason as
+    :func:`compact_partitions_atomic`); all targets must live on the
+    SAME filesystem — the swap renames staged trees homed under the
+    primary table into every target."""
+    dfs = [df for df, _ in writes]
+    _publish(
+        spark,
+        "publish_tables_atomic",
+        [p for _, p in writes],
+        lambda paths: dfs,
+        partition_field,
+        fmt,
+    )
+
+
+def publish_tables_atomic_once(
+    spark: SparkSession,
+    targets: "list[str]",
+    build: "Callable[[], list[DataFrame]]",
+    meta_table: str,
+    batch_id: int,
+    partition_field: str = "date",
+    fmt: str = "parquet",
+) -> bool:
+    """Exactly-once :func:`publish_tables_atomic` for REPLAYABLE
+    callers (Structured Streaming ``foreachBatch``): the batch id is
+    swapped into a tiny ``meta_table`` under the SAME journal as the
+    data tables, so "did batch N publish?" is answered by committed
+    table state itself — no sidecar whose write could be torn from
+    the publish (round-7 advice: ``fact = read(fact) ∪ inc`` re-run
+    by a foreachBatch retry after a committed-but-unacknowledged
+    publish double-counts the batch).
+
+    Order of operations, all under the full lease set (targets +
+    meta): recover every target once, THEN read the meta table, THEN
+    call ``build()`` — so a crashed prior epoch's journal is rolled
+    forward before the replay decision and before any input table is
+    read. Returns False (and publishes nothing) when ``batch_id`` was
+    already published; True otherwise. ``build`` must derive its
+    DataFrames (aligned with ``targets``) from committed table state
+    when invoked, not capture them eagerly."""
+    from pyspark.sql import functions as F
+
+    def build_once(paths: list[str]) -> list[DataFrame] | None:
+        meta_p = paths[-1]
+        if has_published_data(meta_p, partition_field):
+            last = (
+                spark.read.format(fmt).load(meta_p).agg(F.max("batch_id"))
+            ).first()[0]
+            if last is not None and int(last) >= int(batch_id):
+                return None  # replayed epoch: already published
+        dfs = build()
+        if len(dfs) != len(targets):
+            raise ValueError(
+                f"build() returned {len(dfs)} DataFrames for "
+                f"{len(targets)} targets"
+            )
+        meta_df = spark.createDataFrame(
+            [(int(batch_id),)], "batch_id bigint"
+        ).withColumn(partition_field, F.to_date(F.lit("1970-01-01")))
+        return [*dfs, meta_df]
+
+    return _publish(
+        spark,
+        "publish_tables_atomic_once",
+        [*targets, meta_table],
+        build_once,
+        partition_field,
+        fmt,
+    )
+
+
+def _publish(
+    spark: SparkSession,
+    caller: str,
+    paths: list[str],
+    build: "Callable[[list[str]], list[DataFrame] | None]",
+    partition_field: str,
+    fmt: str,
+    clustering_fields: list[str] | None = None,
+    max_records_per_file: int | None = None,
+) -> bool:
+    """The staged commit (protocol above) behind every public writer.
+    ``build`` is called with the resolved target paths once every
+    target is leased and recovered, and returns one frame per target
+    — or None to publish nothing (the call then returns False)."""
+    if not paths:
+        raise ValueError(f"{caller} needs at least one target table")
+    resolved: list[str] = []
+    kinds = set()
+    for p in paths:
+        try:
+            ops, lp = _path_ops(p)
+        except _FsUnavailable as e:
+            raise ValueError(
+                f"{caller} requires local paths or an atomic-rename "
+                f"filesystem, got {p!r}: {e}"
+            ) from e
+        kinds.add(type(ops))
+        resolved.append(lp)
+    if len(kinds) > 1:
+        raise ValueError(f"{caller} targets must share one filesystem")
+    if len(set(resolved)) != len(resolved):
+        raise ValueError(f"duplicate target tables: {resolved}")
+    ordered = sorted(resolved)
+    held: list[str] = []
+    try:
+        with contextlib.ExitStack() as heartbeats:
+            for p in ordered:  # sorted acquisition: no lock-order inversion
+                held.append(_acquire_compaction_lease(p))
+                heartbeats.enter_context(_LeaseHeartbeat(held[-1], ops=ops))
+            # Holding every target's lease, any prior run touching
+            # these tables is debris → resolve it BEFORE building or
+            # staging. Every target, not just the primary: a crashed
+            # run with an overlapping-but-different table set is homed
+            # under ITS primary (possibly none of ours), and only its
+            # intent markers under our targets lead there — left
+            # unresolved, it would be rolled forward AFTER this commit,
+            # resurrecting a stale generation over ours (round-7
+            # advice; r13 operator review, executed repro).
+            for p in ordered:
+                recover_table(
+                    p, partition_field, stale_after_s=0.0, held_paths=ordered
+                )
+            dfs = build(resolved)
+            if dfs is None:
+                return False
+            _stage_and_commit(
+                spark, ops, list(zip(dfs, resolved)), ordered[0],
+                partition_field, fmt, clustering_fields, max_records_per_file,
+            )
+            return True
+    finally:
+        for p in ordered[: len(held)]:
+            _release_compaction_lease(p)
+
+
+def _stage_and_commit(
+    spark: SparkSession,
+    ops,
+    writes: "list[tuple[DataFrame, str]]",
+    primary: str,
+    partition_field: str,
+    fmt: str,
+    clustering_fields: list[str] | None,
+    max_records_per_file: int | None,
+) -> None:
+    """Steps 1-5 of the protocol, under the caller's leases."""
+    run = uuid.uuid4().hex[:12]
+    run_dir = ops.join(primary, "_compact", run)
+    # 1. MARK, before any data is staged: every non-primary target's
+    # _compact root records where the run lives, so recovery triggered
+    # from ANY participating table can resolve it. A crash before the
+    # journal leaves markers pointing at a journal-less run → rolled
+    # back, and the orphan markers removed by the next recovery that
+    # sees them.
+    for _, p in writes:
+        if p != primary:
+            ops.write_json_atomic(
+                ops.join(p, "_compact", f"intent_{run}.json"),
+                {"primary": primary, "run": run},
+            )
+    # 2. WRITE the N tables CONCURRENTLY (r13 optimization, guide
+    # §2.6): each staged write is an independent Spark job into its
+    # own slot dir, and none of them alone saturates the cluster —
+    # submitting them from a small thread pool lets the smaller
+    # tables' jobs back-fill the big table's task tail instead of
+    # waiting for it. The journal is written only after EVERY write
+    # returns. The parent's job description is re-pinned per worker
+    # thread (it is thread-local) so UI/profiler attribution survives.
+    sc = spark.sparkContext
+    parent_desc = sc.getLocalProperty("spark.job.description")
+
+    def stage(i: int, df: DataFrame) -> None:
+        if parent_desc is not None:
+            sc.setJobDescription(parent_desc)
+        write_day_partitioned(
+            df,
+            ops.join(run_dir, f"t{i}", "data"),
+            partition_field=partition_field,
+            clustering_fields=clustering_fields,
+            mode="overwrite",
+            fmt=fmt,
+            max_records_per_file=max_records_per_file,
+        )
+
+    if len(writes) == 1:
+        stage(0, writes[0][0])
+    else:
+        with ThreadPoolExecutor(max_workers=min(3, len(writes))) as pool:
+            futs = [
+                pool.submit(stage, i, df) for i, (df, _) in enumerate(writes)
+            ]
+            errs = [f.exception() for f in futs]
+        for e in errs:
+            if e is not None:
+                raise e
     _CRASH_HOOK("staged")
 
-    # 2. JOURNAL: the atomic commit point. Before this record
-    # exists, recovery rolls the run back; from here on it rolls
-    # it forward.
-    parts = _partition_dirs(data_dir, partition_field, ops)
+    # 3. JOURNAL: the atomic commit point for the whole set. Before
+    # this record exists, recovery rolls the run back; from here on it
+    # rolls it forward.
+    tables = [
+        {
+            "slot": f"t{i}",
+            "path": p,
+            "partitions": _partition_dirs(
+                ops.join(run_dir, f"t{i}", "data"), partition_field, ops
+            ),
+        }
+        for i, (_, p) in enumerate(writes)
+    ]
     ops.write_json_atomic(
         ops.join(run_dir, "journal.json"),
-        {"state": "staged", "partitions": parts},
+        {"state": "staged", "tables": tables},
     )
     _CRASH_HOOK("journaled")
-
-    _finish_swap(path, run_dir, parts, ops)
+    _commit_run(run_dir, tables, ops)
 
 
 def _swap_partition(
@@ -926,301 +1109,10 @@ def _swap_partition(
             raise
 
 
-def _finish_swap(path: str, run_dir: str, parts: list[str], ops) -> None:
-    data_dir = ops.join(run_dir, "data")
-    trash_dir = ops.join(run_dir, "trash")
-    ops.mkdirs(trash_dir)
-    for p in parts:
-        _swap_partition(
-            ops.join(data_dir, p),
-            ops.join(path, p),
-            ops.join(trash_dir, p),
-            ops,
-            hook_point=f"mid_swap:{p}",
-        )
-    # a racing recoverer may have finished the run (journal committed,
-    # run dir removed) while this pass was mid-swap: converged — done.
-    if not ops.isdir(run_dir):
-        ops.rmdir_if_empty(ops.join(path, "_compact"))
-        return
-    try:
-        ops.write_json_atomic(
-            ops.join(run_dir, "journal.json"),
-            {"state": "committed", "partitions": parts},
-        )
-    except Exception as e:
-        # TOCTOU (advisor r8): a racing recoverer's rmtree(run_dir)
-        # between the isdir check above and this write makes the
-        # journal write fail on the missing parent — that's the peer
-        # having committed and cleaned: converged — done.
-        if not ops.isdir(run_dir) and (
-            isinstance(e, FileNotFoundError) or _java_exc_is_missing(e)
-        ):
-            ops.rmdir_if_empty(ops.join(path, "_compact"))
-            return
-        raise
-    _CRASH_HOOK("committed")
-    ops.rmtree(run_dir)
-    ops.rmdir_if_empty(ops.join(path, "_compact"))
-
-
-def recover_compaction(
-    path: str,
-    partition_field: str = "date",
-    stale_after_s: float = COMPACTION_LEASE_STALE_S,
-) -> dict[str, int]:
-    """Resolve any interrupted compaction runs under ``path``.
-
-    Journal present (state=staged): roll FORWARD — finish the swaps
-    from the journal's partition list (idempotent per partition).
-    Journal present (state=committed): delete the leftover run dir.
-    No journal: the crash predates the commit point — roll BACK by
-    deleting the orphan staging tree; the live table was never
-    touched.
-
-    Liveness is keyed on the LEASE file, not run-dir age (round-4
-    advice: a concurrent compaction still in its staged-write phase
-    must not be rolled back mid-write): a fresh lease (younger than
-    ``stale_after_s``) means a possibly-live writer → every run is
-    skipped and counted, untouched. No lease, or a stale one, proves
-    the writer is gone (every writer path holds the lease for its
-    whole run) and recovery proceeds. :func:`compact_partitions_atomic`
-    passes ``stale_after_s=0`` because it recovers while holding its
-    OWN lease. Returns counts per action for observability/tests."""
-    out = {"rolled_forward": 0, "rolled_back": 0, "cleaned": 0, "skipped": 0}
-    ops, path = _path_ops(path)
-    root = ops.join(path, "_compact")
-    lease = ops.join(root, "_lock")
-    if not ops.isdir(root):
-        return out
-    if stale_after_s > 0 and ops.exists(lease):
-        try:
-            age = time.time() - ops.mtime(lease)
-        except OSError:
-            age = stale_after_s  # lease vanished: writer just finished
-        if age < stale_after_s:
-            out["skipped"] = sum(
-                ops.isdir(ops.join(root, r)) for r in ops.listdir(root)
-            )
-            return out
-    for run_id in sorted(ops.listdir(root)):
-        run_dir = ops.join(root, run_id)
-        if not ops.isdir(run_dir):
-            continue  # the _lock lease file
-        if run_id.startswith("multi-"):
-            # A multi-table run homed here spans OTHER tables whose
-            # leases this single-table recovery does not hold — it is
-            # resolved only by recover_multi_swap / the next
-            # publish_tables_atomic, which re-acquire the full set.
-            continue
-        journal_path = ops.join(run_dir, "journal.json")
-        if ops.exists(journal_path):
-            journal = ops.read_json(journal_path)
-            if journal["state"] == "staged":
-                _finish_swap(path, run_dir, journal["partitions"], ops)
-                out["rolled_forward"] += 1
-            else:  # committed: data already live, run dir is debris
-                ops.rmtree(run_dir)
-                out["cleaned"] += 1
-        else:
-            ops.rmtree(run_dir)
-            out["rolled_back"] += 1
-    ops.rmdir_if_empty(root)
-    return out
-
-
-# -- multi-table transactional swap ----------------------------------------
-#
-# Extends the single-table staged-commit protocol to N tables under ONE
-# journal (fact + rollup must move together: a reader that joins them
-# must never converge onto mixed generations). All staging lives under
-# the PRIMARY table's _compact root (primary = lexicographically first
-# target path, so every writer and every recovery picks the same home);
-# the journal write remains the single atomic commit point for the
-# WHOLE set:
-#
-#   crash before the journal → recovery rolls every table BACK
-#     (staging deleted; no live tree was touched);
-#   crash after the journal (including between the two tables' swaps)
-#     → recovery rolls every table FORWARD from the one manifest.
-#
-# Like the single-table protocol, the swap phase is convergent, not
-# isolated: a reader racing the swaps can transiently observe table A
-# new + table B old, but after recovery both are new — the window is
-# O(#partitions) renames, not O(data). Leases are taken on EVERY
-# target in sorted order (no deadlock against another multi-writer)
-# and heartbeated for the run's duration.
-
-
-def publish_tables_atomic(
-    spark: SparkSession,
-    writes: "list[tuple[DataFrame, str]]",
-    partition_field: str = "date",
-    fmt: str = "parquet",
-) -> None:
-    """Stage and atomically publish N (DataFrame → table path) writes
-    under one journal. Local paths or one atomic-rename filesystem
-    (same constraint, same reason as
-    :func:`compact_partitions_atomic`); all targets must live on the
-    SAME filesystem — the swap renames staged trees homed under the
-    primary table into every target."""
-    resolved: list[tuple[DataFrame, str]] = []
-    kinds = set()
-    for df, p in writes:
-        try:
-            ops, lp = _path_ops(p)
-        except _FsUnavailable as e:
-            raise ValueError(
-                f"publish_tables_atomic requires local paths or an "
-                f"atomic-rename filesystem, got {p!r}: {e}"
-            ) from e
-        kinds.add(type(ops))
-        resolved.append((df, lp))
-    if len(kinds) > 1:
-        raise ValueError(
-            "publish_tables_atomic targets must share one filesystem"
-        )
-    paths = [p for _, p in resolved]
-    if len(set(paths)) != len(paths):
-        raise ValueError(f"duplicate target tables: {paths}")
-    ordered = sorted(paths)
-    primary = ordered[0]
-    held: list[str] = []
-    try:
-        for p in ordered:  # sorted acquisition: no lock-order inversion
-            held.append(_acquire_compaction_lease(p))
-        import contextlib
-
-        with contextlib.ExitStack() as stack:
-            for lease in held:
-                stack.enter_context(_LeaseHeartbeat(lease))
-            _publish_under_leases(
-                spark, resolved, primary, partition_field, fmt
-            )
-    finally:
-        for p in ordered[: len(held)]:
-            _release_compaction_lease(p)
-
-
-def _multi_run_dirs(primary: str, ops) -> list[str]:
-    root = ops.join(primary, "_compact")
-    if not ops.isdir(root):
-        return []
-    return sorted(
-        ops.join(root, d)
-        for d in ops.listdir(root)
-        if d.startswith("multi-") and ops.isdir(ops.join(root, d))
-    )
-
-
-def _publish_under_leases(
-    spark: SparkSession,
-    writes: "list[tuple[DataFrame, str]]",
-    primary: str,
-    partition_field: str,
-    fmt: str,
-) -> None:
-    ops = _path_ops(primary)[0]
-    targets = tuple(p for _, p in writes)
-    # Holding every target's lease, any prior run touching these
-    # tables is debris → resolve BOTH protocols before staging
-    # (round-7 advice: a crashed-but-journaled single-table compaction
-    # left unresolved here would be rolled forward AFTER this publish
-    # commits, resurrecting the pre-publish generation over newer
-    # committed data). Single-table first, then multi, so a committed
-    # publish generation is what survives when both list a partition.
-    # Multi recovery runs for EVERY target, not just our primary: a
-    # crashed publish with an overlapping-but-different table set is
-    # homed under ITS primary (possibly none of our targets), but its
-    # intent markers under our targets let the recovery find and
-    # finish it BEFORE we stage — without this, a later recovery of
-    # that other primary rolled the stale staged generation forward
-    # over our committed one (r13 operator review, executed repro).
-    for p in targets:
-        recover_compaction(p, partition_field, stale_after_s=0.0)
-    for p in targets:
-        recover_multi_swap(
-            p, partition_field, stale_after_s=0.0, held_paths=targets
-        )
-
-    run_dir = ops.join(
-        ops.join(primary, "_compact"), f"multi-{uuid.uuid4().hex[:12]}"
-    )
-    run_name = run_dir.rsplit("/", 1)[1]
-    # Intent markers FIRST — before any data is staged, every
-    # non-primary target's _compact root records where the run lives,
-    # so recovery triggered from ANY participating table can resolve
-    # it. A crash before the journal goes 'staged' leaves markers
-    # pointing at a journal-less run → rolled back and the orphan
-    # markers removed on the next recovery that sees them.
-    for p in targets:
-        if p == primary:
-            continue
-        ops.mkdirs(ops.join(p, "_compact"))
-        ops.write_json_atomic(
-            ops.join(ops.join(p, "_compact"), f"multi_intent_{run_name}.json"),
-            {"primary": primary, "run": run_name},
-        )
-    # Stage the N tables CONCURRENTLY (r13 optimization, guide §2.6):
-    # each staged write is an independent Spark job into its own
-    # run-private slot dir, and none of them alone saturates the
-    # cluster — submitting them from a small thread pool lets the
-    # smaller tables' jobs back-fill the big table's task tail instead
-    # of waiting for it. Protocol-neutral: the journal is written only
-    # after EVERY write returns (a crash mid-staging still leaves a
-    # journal-less run that recovery rolls back), and the crash hooks
-    # fire between phases exactly as before. The parent's job
-    # description is re-pinned per worker thread (it is thread-local)
-    # so UI/profiler attribution survives.
-    sc = spark.sparkContext
-    parent_desc = sc.getLocalProperty("spark.job.description")
-
-    def _stage(i: int, df: DataFrame) -> None:
-        if parent_desc is not None:
-            sc.setJobDescription(parent_desc)
-        data_dir = ops.join(ops.join(run_dir, f"t{i}"), "data")
-        write_day_partitioned(
-            df,
-            data_dir,
-            partition_field=partition_field,
-            mode="overwrite",
-            fmt=fmt,
-        )
-
-    if len(writes) == 1:
-        _stage(0, writes[0][0])
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(3, len(writes))) as pool:
-            futs = [
-                pool.submit(_stage, i, df)
-                for i, (df, _) in enumerate(writes)
-            ]
-            errs = [f.exception() for f in futs]
-        for e in errs:
-            if e is not None:
-                raise e
-    tables = [{"slot": f"t{i}", "path": p} for i, (_, p) in enumerate(writes)]
-    _CRASH_HOOK("multi_staged")
-    for t in tables:
-        t["partitions"] = _partition_dirs(
-            ops.join(ops.join(run_dir, t["slot"]), "data"),
-            partition_field,
-            ops,
-        )
-    ops.write_json_atomic(
-        ops.join(run_dir, "journal.json"),
-        {"state": "staged", "tables": tables},
-    )
-    _CRASH_HOOK("multi_journaled")
-    _finish_multi_swap(run_dir, tables, ops)
-
-
-def _swap_multi_table(run_dir: str, t: dict, ops) -> None:
-    """Finish ONE table's swaps from a staged multi journal
-    (idempotent per partition, tolerant of a concurrently-finishing
-    peer — same contract as :func:`_swap_partition`)."""
+def _swap_table(run_dir: str, t: dict, ops) -> None:
+    """Step 4 for ONE table of a staged journal (idempotent per
+    partition, tolerant of a concurrently-finishing peer — same
+    contract as :func:`_swap_partition`)."""
     slot_dir = ops.join(run_dir, t["slot"])
     data_dir = ops.join(slot_dir, "data")
     trash_dir = ops.join(slot_dir, "trash")
@@ -1231,14 +1123,16 @@ def _swap_multi_table(run_dir: str, t: dict, ops) -> None:
             ops.join(t["path"], p),
             ops.join(trash_dir, p),
             ops,
-            hook_point=f"multi_swap:{t['slot']}:{p}",
+            hook_point=f"mid_swap:{t['slot']}:{p}",
         )
-    _CRASH_HOOK(f"multi_table_done:{t['slot']}")
+    _CRASH_HOOK(f"swapped:{t['slot']}")
 
 
-def _finish_multi_swap(run_dir: str, tables: list[dict], ops) -> None:
+def _commit_run(run_dir: str, tables: list[dict], ops) -> None:
+    """Steps 4-5 from a staged journal — run by the writer and by
+    recovery alike."""
     for t in tables:
-        _swap_multi_table(run_dir, t, ops)
+        _swap_table(run_dir, t, ops)
     if not ops.isdir(run_dir):
         return  # a racing recoverer committed and cleaned the run
     try:
@@ -1247,171 +1141,153 @@ def _finish_multi_swap(run_dir: str, tables: list[dict], ops) -> None:
             {"state": "committed", "tables": tables},
         )
     except Exception as e:
-        # Same TOCTOU as _finish_swap (advisor r8): a peer's
-        # rmtree(run_dir) between the check and the write means the
-        # peer committed — converged, don't raise.
+        # TOCTOU (advisor r8): a racing recoverer's rmtree(run_dir)
+        # between the isdir check above and this write makes the
+        # journal write fail on the missing parent — that's the peer
+        # having committed and cleaned: converged — done.
         if not ops.isdir(run_dir) and (
             isinstance(e, FileNotFoundError) or _java_exc_is_missing(e)
         ):
             return
         raise
+    _CRASH_HOOK("committed")
     ops.rmtree(run_dir)
     # committed and cleaned: the intent markers under the non-primary
     # participants have nothing left to point at
-    run_name = run_dir.rsplit("/", 1)[1]
+    run = run_dir.rsplit("/", 1)[1]
     for t in tables:
-        ops.unlink(
-            ops.join(
-                ops.join(t["path"], "_compact"),
-                f"multi_intent_{run_name}.json",
-            ),
-            missing_ok=True,
-        )
-        ops.rmdir_if_empty(ops.join(t["path"], "_compact"))
-    root = run_dir.rsplit("/", 1)[0]
-    ops.rmdir_if_empty(root)
+        root = ops.join(t["path"], "_compact")
+        ops.unlink(ops.join(root, f"intent_{run}.json"), missing_ok=True)
+        ops.rmdir_if_empty(root)
 
 
-def recover_multi_swap(
-    primary: str,
+def recover_table(
+    path: str,
     partition_field: str = "date",
     stale_after_s: float = COMPACTION_LEASE_STALE_S,
-    held_paths: "tuple[str, ...]" = (),
+    held_paths: "Iterable[str]" = (),
     _follow_intents: bool = True,
 ) -> dict[str, int]:
-    """Resolve interrupted multi-table runs homed under ``primary``.
+    """Resolve every interrupted staged commit touching ``path``.
 
-    Liveness is checked per TABLE, not just on the primary (round-7
-    advice: a journaled multi run can list a non-primary table whose
-    lease a LIVE single-table compaction holds — rolling it forward
-    under that writer's feet races its swaps). Before finishing a
-    staged run, the leases of EVERY table in its journal are acquired
-    (sorted order, same as the writer — no lock inversion); a table
-    whose lease is live-fresh blocks: the run's swaps are finished
-    ONLY for acquirable/held tables (idempotent partial forward — the
-    journal stays ``staged`` and a later recovery completes the rest)
-    and counted under ``partial``.
+    Intent markers are followed FIRST: a crashed run that touches this
+    table but is homed under a DIFFERENT primary is invisible to the
+    scan of this table's own runs — its marker here names that
+    primary, and resolving it before anything else closes the
+    resurrection window (r13 operator review: P1{A,B} crashes
+    journaled, P2{B,C} commits, a later recovery of A rolled P1's
+    stale B forward over P2's). A marker whose run is gone (committed
+    and cleaned, or rolled back) is an orphan and removed.
+
+    Then each run homed here: journal ``staged`` → roll FORWARD,
+    finishing the swaps from the journal's table list (idempotent per
+    partition); journal ``committed`` → delete the leftover run dir;
+    no journal → the crash predates the commit point, roll BACK by
+    deleting the orphan staging tree (no live tree was touched).
+
+    Liveness is keyed on LEASES, not run-dir age (round-4 advice: a
+    writer still in its staged-write phase must not be rolled back
+    mid-write): a fresh lease on ``path`` (younger than
+    ``stale_after_s``) means a possibly-live writer → every run homed
+    here is skipped and counted, untouched. Liveness is also checked
+    per TABLE (round-7 advice: a journaled run can list a table whose
+    lease a LIVE writer holds — rolling it forward under that writer's
+    feet races its swaps): before finishing a staged run, the leases
+    of EVERY table in its journal are acquired (sorted, as the writer
+    does — no lock inversion) and heartbeated. A table whose lease is
+    live-fresh blocks: the swaps are finished ONLY for the acquirable
+    tables (idempotent partial forward — the journal stays ``staged``
+    and a later recovery completes the rest), counted as ``partial``.
 
     ``held_paths`` names tables whose leases the CALLER already holds
-    (``publish_tables_atomic`` / ``compact_partitions_atomic`` recover
-    while holding their own leases) — those are never re-acquired and
-    never block. The primary's top-level freshness gate is unchanged:
-    a fresh primary lease means a possibly-live multi writer → skip
-    everything."""
-    out = {
-        "rolled_forward": 0, "rolled_back": 0, "cleaned": 0,
-        "skipped": 0, "partial": 0,
-    }
-    ops, primary = _path_ops(primary)
+    (every writer recovers its targets while holding their leases,
+    with ``stale_after_s=0``) — never re-acquired, never blocking.
+    Returns counts per action for observability/tests."""
+    out = dict.fromkeys(
+        ("rolled_forward", "rolled_back", "cleaned", "skipped", "partial"), 0
+    )
+    ops, path = _path_ops(path)
     held = {_path_ops(p)[1] for p in held_paths}
-    # Follow intent markers FIRST: a crashed multi run that TOUCHES
-    # this table but is homed under a DIFFERENT primary is invisible
-    # to the homed-run scan below — its marker here names that
-    # primary, and resolving it before anything else closes the
-    # resurrection window (r13 operator review: P1{A,B} crashes
-    # journaled, P2{B,C} commits, a later recovery of A rolled P1's
-    # stale B forward over P2's). The remote resolution takes the
-    # full per-table lease protocol, so a live writer anywhere still
-    # blocks exactly as for homed runs; a marker whose run is gone
-    # (committed+cleaned, or rolled back) is an orphan and removed.
+    root = ops.join(path, "_compact")
+    if not ops.isdir(root):
+        return out
     if _follow_intents:
-        root = ops.join(primary, "_compact")
-        markers = (
-            sorted(
-                n
-                for n in ops.listdir(root)
-                if n.startswith("multi_intent_") and n.endswith(".json")
-            )
-            if ops.isdir(root)
-            else []
-        )
-        for name in markers:
-            mpath = ops.join(root, name)
+        for name in sorted(ops.listdir(root)):
+            if not (name.startswith("intent_") and name.endswith(".json")):
+                continue
+            marker = ops.join(root, name)
             try:
-                info = ops.read_json(mpath)
+                info = ops.read_json(marker)
                 remote, run = info["primary"], info["run"]
             except Exception:
                 continue  # unreadable marker: leave for inspection
-            recover_multi_swap(
+            recover_table(
                 remote,
                 partition_field,
                 stale_after_s,
                 held_paths=held_paths,
                 _follow_intents=False,
             )
-            run_left = ops.isdir(
-                ops.join(ops.join(_path_ops(remote)[1], "_compact"), run)
-            )
-            if not run_left:
-                ops.unlink(mpath, missing_ok=True)
-    runs = _multi_run_dirs(primary, ops)
-    if not runs:
-        return out
-    lease = ops.join(ops.join(primary, "_compact"), "_lock")
-    if stale_after_s > 0 and ops.exists(lease):
+            if not ops.isdir(ops.join(remote, "_compact", run)):
+                ops.unlink(marker, missing_ok=True)
+    names = sorted(ops.listdir(root)) if ops.isdir(root) else []
+    # run dirs only: not the _lock lease, intent markers or .crc sidecars
+    runs = [ops.join(root, n) for n in names if ops.isdir(ops.join(root, n))]
+    lease = ops.join(root, "_lock")
+    if runs and stale_after_s > 0 and ops.exists(lease):
         try:
             age = time.time() - ops.mtime(lease)
         except OSError:
-            age = stale_after_s
+            age = stale_after_s  # lease vanished: writer just finished
         if age < stale_after_s:
             out["skipped"] = len(runs)
             return out
     for run_dir in runs:
         journal_path = ops.join(run_dir, "journal.json")
-        if ops.exists(journal_path):
-            journal = ops.read_json(journal_path)
-            if journal["state"] == "staged":
-                import contextlib
-
-                acquired: list[str] = []
-                blocked: list[str] = []
-                try:
-                    # Heartbeat every lease acquired for this run's
-                    # roll-forward (advisor r8: a swap stalled past
-                    # COMPACTION_LEASE_STALE_S — slow namenode, many
-                    # partitions — would otherwise age its own lease
-                    # into breakable staleness mid-swap, re-admitting
-                    # the race the per-table liveness check closes).
-                    # Heartbeats stop (ExitStack exit) BEFORE the
-                    # finally releases the leases.
-                    with contextlib.ExitStack() as hb:
-                        for t in sorted(
-                            journal["tables"], key=lambda t: t["path"]
-                        ):
-                            p = _path_ops(t["path"])[1]
-                            if p in held or p in acquired:
-                                continue
-                            try:
-                                lease_path = _acquire_compaction_lease(p)
-                                acquired.append(p)
-                                hb.enter_context(_LeaseHeartbeat(lease_path))
-                            except CompactionLockHeld:
-                                blocked.append(p)
-                        if not blocked:
-                            _finish_multi_swap(
-                                run_dir, journal["tables"], ops
-                            )
-                            out["rolled_forward"] += 1
-                        else:
-                            # Finish what we can exclusively touch so a
-                            # caller about to republish these tables
-                            # can't be resurrected-over later; leave
-                            # the journal staged for the blocked
-                            # remainder.
-                            for t in journal["tables"]:
-                                if _path_ops(t["path"])[1] not in blocked:
-                                    _swap_multi_table(run_dir, t, ops)
-                            out["partial"] += 1
-                finally:
-                    for p in acquired:
-                        _release_compaction_lease(p)
-            else:
-                ops.rmtree(run_dir)
-                out["cleaned"] += 1
-        else:
+        if not ops.exists(journal_path):
             ops.rmtree(run_dir)
             out["rolled_back"] += 1
-    ops.rmdir_if_empty(ops.join(primary, "_compact"))
+            continue
+        journal = ops.read_json(journal_path)
+        if journal["state"] != "staged":  # committed: data already live
+            ops.rmtree(run_dir)
+            out["cleaned"] += 1
+            continue
+        acquired: list[str] = []
+        blocked: list[str] = []
+        try:
+            # Heartbeat every lease acquired for this roll-forward
+            # (advisor r8: a swap stalled past COMPACTION_LEASE_STALE_S
+            # — slow namenode, many partitions — would otherwise age
+            # its own lease into breakable staleness mid-swap). The
+            # heartbeats stop BEFORE the finally releases the leases.
+            with contextlib.ExitStack() as heartbeats:
+                for p in sorted({t["path"] for t in journal["tables"]}):
+                    if p in held:
+                        continue
+                    try:
+                        lease_p = _acquire_compaction_lease(p)
+                    except CompactionLockHeld:
+                        blocked.append(p)
+                        continue
+                    acquired.append(p)
+                    heartbeats.enter_context(_LeaseHeartbeat(lease_p))
+                if not blocked:
+                    _commit_run(run_dir, journal["tables"], ops)
+                    out["rolled_forward"] += 1
+                else:
+                    # Finish what we can exclusively touch so a caller
+                    # about to republish these tables can't be
+                    # resurrected-over later; the journal stays staged
+                    # for the blocked remainder.
+                    for t in journal["tables"]:
+                        if t["path"] not in blocked:
+                            _swap_table(run_dir, t, ops)
+                    out["partial"] += 1
+        finally:
+            for p in acquired:
+                _release_compaction_lease(p)
+    ops.rmdir_if_empty(root)
     return out
 
 
@@ -1442,104 +1318,6 @@ def read_published_or_empty(
     if has_published_data(path, partition_field):
         return spark.read.format(fmt).load(path)
     return spark.createDataFrame([], like.schema)
-
-
-def publish_tables_atomic_once(
-    spark: SparkSession,
-    targets: "list[str]",
-    build: "Callable[[], list[DataFrame]]",
-    meta_table: str,
-    batch_id: int,
-    partition_field: str = "date",
-    fmt: str = "parquet",
-) -> bool:
-    """Exactly-once :func:`publish_tables_atomic` for REPLAYABLE
-    callers (Structured Streaming ``foreachBatch``): the batch id is
-    swapped into a tiny ``meta_table`` under the SAME journal as the
-    data tables, so "did batch N publish?" is answered by committed
-    table state itself — no sidecar whose write could be torn from
-    the publish (round-7 advice: ``fact = read(fact) ∪ inc`` re-run
-    by a foreachBatch retry after a committed-but-unacknowledged
-    publish double-counts the batch).
-
-    Order of operations, all under the full lease set (targets +
-    meta): resolve BOTH protocols' debris first, THEN read the meta
-    table, THEN call ``build()`` — so a crashed prior epoch's journal
-    is rolled forward before the replay decision and before any input
-    table is read. Returns False (and publishes nothing) when
-    ``batch_id`` was already published; True otherwise. ``build``
-    must derive its DataFrames (aligned with ``targets``) from
-    committed table state when invoked, not capture them eagerly."""
-    from pyspark.sql import functions as F
-
-    resolved: list[str] = []
-    for p in list(targets) + [meta_table]:
-        try:
-            _, lp = _path_ops(p)
-        except _FsUnavailable as e:
-            raise ValueError(
-                f"publish_tables_atomic_once requires local paths or an "
-                f"atomic-rename filesystem, got {p!r}: {e}"
-            ) from e
-        resolved.append(lp)
-    *data_paths, meta_p = resolved
-    if len(set(resolved)) != len(resolved):
-        raise ValueError(f"duplicate target tables: {resolved}")
-    ordered = sorted(resolved)
-    primary = ordered[0]
-    held: list[str] = []
-    try:
-        for p in ordered:  # sorted acquisition: no lock-order inversion
-            held.append(_acquire_compaction_lease(p))
-        import contextlib
-
-        with contextlib.ExitStack() as stack:
-            for lease in held:
-                stack.enter_context(_LeaseHeartbeat(lease))
-            for p in resolved:
-                recover_compaction(p, partition_field, stale_after_s=0.0)
-            recover_multi_swap(
-                primary,
-                partition_field,
-                stale_after_s=0.0,
-                held_paths=tuple(resolved),
-            )
-            ops = _path_ops(primary)[0]
-            # lease acquisition already created <meta>/_compact, so
-            # dir-existence alone doesn't mean committed data: probe
-            # for actual partition dirs before reading
-            if ops.isdir(meta_p) and _partition_dirs(
-                meta_p, partition_field, ops
-            ):
-                row = (
-                    spark.read.format(fmt)
-                    .load(meta_p)
-                    .agg(F.max("batch_id"))
-                    .first()
-                )
-                if (
-                    row is not None
-                    and row[0] is not None
-                    and int(row[0]) >= int(batch_id)
-                ):
-                    return False  # replayed epoch: already published
-            dfs = build()
-            if len(dfs) != len(data_paths):
-                raise ValueError(
-                    f"build() returned {len(dfs)} DataFrames for "
-                    f"{len(data_paths)} targets"
-                )
-            meta_df = spark.createDataFrame(
-                [(int(batch_id),)], "batch_id bigint"
-            ).withColumn(partition_field, F.to_date(F.lit("1970-01-01")))
-            writes = list(zip(dfs, data_paths)) + [(meta_df, meta_p)]
-            _publish_under_leases(
-                spark, writes, primary, partition_field, fmt
-            )
-            return True
-    finally:
-        for p in ordered[: len(held)]:
-            _release_compaction_lease(p)
 
 
 def insert_rows_via_format(

@@ -28,21 +28,14 @@ sweep script.
 from __future__ import annotations
 
 import datetime
-import math
 
-import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from tests.oracle_compare import TABLES, assert_matches_oracle
 
 # (key_col, timestamp cols) — mirror scripts/dates_sweep.py exactly
 TS_PLAN = {
@@ -87,37 +80,9 @@ def dates_dir(tmp_path_factory):
     return str(d)
 
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return (1,)
-            if math.isinf(v):
-                return (3, v > 0)
-            return (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_dates_input_matches_oracle(spark, dates_dir, name):
-    sdf = entrymod.queries()[name](spark, dates_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{dates_dir}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
-    assert srows == drows
+    assert_matches_oracle(spark, dates_dir, name)
 
 
 def test_bound_event_time_window(spark):

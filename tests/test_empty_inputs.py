@@ -19,20 +19,13 @@ pages, a 1-file layout cannot show selective skipping.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from tests.oracle_compare import TABLES, assert_matches_oracle
 
 # at n=1 these FIXED_FAST members pin heuristics below their scale
 # floor (see module docstring) — empty-only
@@ -84,33 +77,9 @@ def fixture_dir(request, tmp_path_factory):
     return k, str(d)
 
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            return (1,) if math.isnan(v) else (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_degenerate_input_matches_oracle(spark, fixture_dir, name):
     k, d = fixture_dir
     if k >= 1 and name in SCALE_FLOOR_EXEMPT:
         pytest.skip("heuristic booleans below their scale floor at n=1")
-    sdf = entrymod.queries()[name](spark, d)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
-    assert srows == drows
+    assert_matches_oracle(spark, d, name)

@@ -19,21 +19,13 @@ double partial-order ulps flipped a rounding boundary.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from tests.oracle_compare import TABLES, assert_matches_oracle
 
 # (key_col, cols_to_null) — mirror scripts/nulls_sweep.py exactly
 NULL_PLAN = {
@@ -88,33 +80,9 @@ def nulls_dir(tmp_path_factory):
     return str(d)
 
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            return (1,) if math.isnan(v) else (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_nulls_input_matches_oracle(spark, nulls_dir, name):
-    sdf = entrymod.queries()[name](spark, nulls_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{nulls_dir}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
-    assert srows == drows
+    assert_matches_oracle(spark, nulls_dir, name)
 
 
 def test_null_text_gets_null_fingerprint(spark):

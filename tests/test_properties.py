@@ -643,3 +643,64 @@ def test_materialize_is_the_only_persist_site():
         if "semanticHash" in line or (path != allowed and raw.search(line))
     ]
     assert not offenders, "\n".join(offenders)
+
+
+def test_sinks_has_one_staged_commit_protocol():
+    """Every staged commit in sinks.py (compaction and N-table publish)
+    goes through one protocol: one recovery function and one set of
+    crash points — no second, multi-table family of run dirs or names
+    may grow back beside it."""
+    import ast
+    import pathlib
+    import re
+
+    import facebook_ads_bigquery_etl_spark as pkg
+
+    src = (pathlib.Path(pkg.__file__).parent / "sinks.py").read_text()
+    tree = ast.parse(src)
+    recovers = [
+        n.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("recover_")
+    ]
+    assert recovers == ["recover_table"]
+
+    def literal_head(node):
+        # a plain string, or the constant prefix of an f-string
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr) and isinstance(
+            node.values[0], ast.Constant
+        ):
+            return node.values[0].value
+        return None
+
+    points = set()
+    for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+        args = list(call.args) if getattr(call.func, "id", "") == "_CRASH_HOOK" else []
+        args += [k.value for k in call.keywords if k.arg == "hook_point"]
+        points |= {h for h in map(literal_head, args) if h is not None}
+    assert points == {"staged", "journaled", "mid_swap:", "swapped:", "committed"}
+    offenders = [
+        line.strip()
+        for line in src.splitlines()
+        if re.search(r"""["']multi[-_]""", line)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_pandas_udfs_declare_types_by_hints():
+    """No pandas UDF in the package names its kind through the
+    deprecated ``PandasUDFType``: every one infers it from type hints."""
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "PandasUDFType" in line
+    ]
+    assert not offenders, offenders

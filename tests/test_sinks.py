@@ -38,6 +38,18 @@ def _rows(df):
     return sorted((str(r["date"]), r["campaign_id"], r["spend"]) for r in df.collect())
 
 
+def _crash_points(n_tables):
+    """Every crash point of one staged commit over ``n_tables`` tables
+    holding the two fixture days, in protocol order."""
+    days = ("date=2025-01-01", "date=2025-01-02")
+    swaps = [
+        point
+        for i in range(n_tables)
+        for point in (*(f"mid_swap:t{i}:{d}" for d in days), f"swapped:t{i}")
+    ]
+    return ["staged", "journaled", *swaps, "committed"]
+
+
 class TestFormatSwap:
     @pytest.mark.parametrize("fmt", ["parquet", "orc"])
     def test_day_partitioned_write_is_format_agnostic(self, spark, tmp_path, frame, fmt):
@@ -219,7 +231,7 @@ class TestAtomicCompaction:
         assert after == before
         assert _rows(spark.read.parquet(table)) == rows_before
         sinks._CRASH_HOOK = lambda point: None
-        report = sinks.recover_compaction(table)
+        report = sinks.recover_table(table)
         assert report["rolled_back"] == 1
         assert not os.path.isdir(os.path.join(self._loc(table), "_compact"))
 
@@ -234,7 +246,7 @@ class TestAtomicCompaction:
         with pytest.raises(RuntimeError, match="injected crash"):
             sinks.compact_partitions(spark, table)
         sinks._CRASH_HOOK = lambda point: None
-        report = sinks.recover_compaction(table)
+        report = sinks.recover_table(table)
         assert report["rolled_forward"] == 1
         assert _rows(spark.read.parquet(table)) == rows_before
         # compacted: exactly one file per partition, no run debris
@@ -272,15 +284,11 @@ class TestAtomicCompaction:
         assert os.path.isdir(os.path.join(self._loc(table), "_compact"))
         assert _rows(spark.read.parquet(table)) == rows_before
         # and recovery rolls the journaled run forward
-        report = sinks.recover_compaction(table)
+        report = sinks.recover_table(table)
         assert report["rolled_forward"] == 1
         assert _rows(spark.read.parquet(table)) == rows_before
 
-    @pytest.mark.parametrize(
-        "point",
-        ["staged", "journaled", "mid_swap:date=2025-01-01",
-         "mid_swap:date=2025-01-02", "committed"],
-    )
+    @pytest.mark.parametrize("point", _crash_points(n_tables=1))
     def test_crash_matrix_every_point_recovers_cleanly(
         self, spark, tmp_path, frame, table, point
     ):
@@ -300,7 +308,7 @@ class TestAtomicCompaction:
         with pytest.raises(RuntimeError, match="injected crash"):
             sinks.compact_partitions(spark, table)
         sinks._CRASH_HOOK = lambda point: None
-        sinks.recover_compaction(table)
+        sinks.recover_table(table)
         assert _rows(spark.read.parquet(table)) == rows_before
         files_after = {
             p: self._files(table, p)
@@ -338,7 +346,7 @@ class TestOverlappingMultiPublish:
             pass
 
         def hook(point):
-            if point == "multi_journaled":
+            if point == "journaled":
                 raise Crash(point)
 
         sinks._CRASH_HOOK = hook
@@ -360,8 +368,8 @@ class TestOverlappingMultiPublish:
         assert [r["v"] for r in spark.read.parquet(B).collect()] == ["P2"]
         import glob
 
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi_intent_*"))
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi-*"))
+        # no intent markers, run dirs or leases left under any table
+        assert not glob.glob(str(tmp_path / "*" / "_compact" / "*"))
 
     def test_pre_journal_crash_rolls_back_and_cleans_markers(self, spark, tmp_path):
         """Crash BEFORE the journal goes staged: markers point at a
@@ -378,7 +386,7 @@ class TestOverlappingMultiPublish:
             pass
 
         def hook(point):
-            if point == "multi_staged":
+            if point == "staged":
                 raise Crash(point)
 
         sinks._CRASH_HOOK = hook
@@ -396,8 +404,8 @@ class TestOverlappingMultiPublish:
         assert [r["v"] for r in spark.read.parquet(B).collect()] == ["P4"]
         import glob
 
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi_intent_*"))
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi-*"))
+        # no intent markers, run dirs or leases left under any table
+        assert not glob.glob(str(tmp_path / "*" / "_compact" / "*"))
 
 
 class TestRacingRecoverers:
@@ -434,11 +442,15 @@ class TestRacingRecoverers:
             if point.startswith("mid_swap:") and fired["n"] == 0:
                 fired["n"] = 1
                 sinks._CRASH_HOOK = lambda p: None
-                sinks.recover_compaction(path, stale_after_s=0.0)
+                # a peer whose lease was broken as stale mid-run still
+                # believes it holds the table: it does not re-acquire
+                sinks.recover_table(
+                    path, stale_after_s=0.0, held_paths=(path,)
+                )
 
         sinks._CRASH_HOOK = competitor
         try:
-            report = sinks.recover_compaction(path, stale_after_s=0.0)
+            report = sinks.recover_table(path, stale_after_s=0.0)
         finally:
             sinks._CRASH_HOOK = lambda point: None
         assert fired["n"] == 1, "interleaver did not fire"
@@ -525,13 +537,13 @@ class TestCompactionLeaseAndPathGuards:
         run_dir = os.path.join(table, "_compact", "livewriter123")
         os.makedirs(os.path.join(run_dir, "data"))
         try:
-            report = sinks.recover_compaction(table)
+            report = sinks.recover_table(table)
             assert report["skipped"] == 1 and report["rolled_back"] == 0
             assert os.path.isdir(run_dir)  # untouched
         finally:
             sinks._release_compaction_lease(table)
         # writer gone (lease released) → the same tree is now debris
-        report = sinks.recover_compaction(table)
+        report = sinks.recover_table(table)
         assert report["rolled_back"] == 1
         assert not os.path.isdir(run_dir)
 
@@ -856,19 +868,8 @@ class TestMultiTableSwap:
         assert not os.path.isdir(os.path.join(self._loc(fact_t), "_compact"))
         assert not os.path.isdir(os.path.join(self._loc(roll_t), "_compact"))
 
-    @pytest.mark.parametrize(
-        "point,expect_new",
-        [
-            ("multi_staged", False),         # pre-journal → both roll BACK
-            ("multi_journaled", True),       # post-journal → both FORWARD
-            ("multi_swap:t0:date=2025-01-01", True),
-            ("multi_table_done:t0", True),   # BETWEEN the two tables
-            ("multi_swap:t1:date=2025-01-02", True),
-        ],
-    )
-    def test_crash_matrix_converges_consistently(
-        self, spark, tmp_path, point, expect_new
-    ):
+    @pytest.mark.parametrize("point", _crash_points(n_tables=2))
+    def test_crash_matrix_converges_consistently(self, spark, tmp_path, point):
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         fact_t, roll_t = self._setup(spark, tmp_path)
@@ -888,15 +889,19 @@ class TestMultiTableSwap:
         finally:
             sinks._CRASH_HOOK = old_hook
         primary = min(fact_t, roll_t)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
-        if expect_new:
-            assert report["rolled_forward"] == 1
-            assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
-            assert self._spends(spark, roll_t) == [30.0, 30.0]
-        else:
-            assert report["rolled_back"] == 1
+        report = sinks.recover_table(primary, stale_after_s=0.0)
+        # pre-journal → both roll BACK; after the commit record → the
+        # leftover run is cleaned; anywhere between → both FORWARD
+        action = {"staged": "rolled_back", "committed": "cleaned"}.get(
+            point, "rolled_forward"
+        )
+        assert report[action] == 1
+        if action == "rolled_back":
             assert self._spends(spark, fact_t) == [1.0, 2.0, 3.0]
             assert self._spends(spark, roll_t) == [3.0, 3.0]
+        else:
+            assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
+            assert self._spends(spark, roll_t) == [30.0, 30.0]
         # cross-table invariant: rollup always re-derivable from fact
         fact_sum = sorted(
             r["s"]
@@ -907,41 +912,31 @@ class TestMultiTableSwap:
         )
         assert fact_sum == self._spends(spark, roll_t)
         # recovery idempotent; no debris under either table
-        again = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+        again = sinks.recover_table(primary, stale_after_s=0.0)
         assert again == {
             "rolled_forward": 0, "rolled_back": 0, "cleaned": 0,
             "skipped": 0, "partial": 0,
         }
-        assert not os.path.isdir(os.path.join(self._loc(primary), "_compact"))
+        # the other table's recovery drops its orphaned intent marker
+        sinks.recover_table(max(fact_t, roll_t), stale_after_s=0.0)
+        for t in (fact_t, roll_t):
+            assert not os.path.isdir(os.path.join(self._loc(t), "_compact"))
 
     def test_fresh_primary_lease_defers_recovery(self, spark, tmp_path):
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         fact_t, roll_t = self._setup(spark, tmp_path)
         primary = min(fact_t, roll_t)
-        run = os.path.join(self._loc(primary), "_compact", "multi-deadbeef")
+        run = os.path.join(self._loc(primary), "_compact", "deadbeef")
         os.makedirs(os.path.join(run, "t0", "data"))
         sinks._acquire_compaction_lease(primary)
         try:
-            report = sinks.recover_multi_swap(primary)
+            report = sinks.recover_table(primary)
             assert report["skipped"] == 1 and os.path.isdir(run)
         finally:
             sinks._release_compaction_lease(primary)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+        report = sinks.recover_table(primary, stale_after_s=0.0)
         assert report["rolled_back"] == 1 and not os.path.isdir(run)
-
-    def test_single_table_recovery_leaves_multi_runs_alone(
-        self, spark, tmp_path
-    ):
-        import facebook_ads_bigquery_etl_spark.sinks as sinks
-
-        fact_t, roll_t = self._setup(spark, tmp_path)
-        primary = min(fact_t, roll_t)
-        run = os.path.join(self._loc(primary), "_compact", "multi-cafebabe")
-        os.makedirs(os.path.join(run, "t0", "data"))
-        report = sinks.recover_compaction(primary, stale_after_s=0.0)
-        assert report["rolled_back"] == 0 and os.path.isdir(run)
-        sinks.recover_multi_swap(primary, stale_after_s=0.0)
 
     def test_publish_resolves_crashed_single_table_compaction(
         self, spark, tmp_path
@@ -974,14 +969,14 @@ class TestMultiTableSwap:
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
         # The stale compaction journal is gone: recovery is a no-op and
         # cannot resurrect the pre-publish generation.
-        report = sinks.recover_compaction(fact_t, stale_after_s=0.0)
+        report = sinks.recover_table(fact_t, stale_after_s=0.0)
         assert report["rolled_forward"] == 0
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
 
     def test_multi_roll_forward_blocks_on_foreign_table_lease(
         self, spark, tmp_path
     ):
-        """Round-7 advice: recover_multi_swap checked only the PRIMARY
+        """Round-7 advice: recovery once checked only the PRIMARY
         lease, so it could roll a run forward over a non-primary table
         while a live writer held that table's lease. Now the held
         table blocks (partial forward: exclusively-owned tables
@@ -994,7 +989,7 @@ class TestMultiTableSwap:
         old_hook = sinks._CRASH_HOOK
 
         def crash(p):
-            if p == "multi_table_done:t0":
+            if p == "swapped:t0":
                 raise RuntimeError("injected crash between tables")
 
         sinks._CRASH_HOOK = crash
@@ -1008,14 +1003,14 @@ class TestMultiTableSwap:
         primary, other = min(fact_t, roll_t), max(fact_t, roll_t)
         sinks._acquire_compaction_lease(other)  # live writer on t1
         try:
-            report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+            report = sinks.recover_table(primary, stale_after_s=0.0)
             assert report["partial"] == 1
             assert report["rolled_forward"] == 0
             # the held table was not touched: still the old generation
             assert self._spends(spark, roll_t) == [3.0, 3.0]
         finally:
             sinks._release_compaction_lease(other)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+        report = sinks.recover_table(primary, stale_after_s=0.0)
         assert report["rolled_forward"] == 1
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
         assert self._spends(spark, roll_t) == [30.0, 30.0]
@@ -1081,7 +1076,7 @@ class TestMultiTableSwap:
         old_hook = sinks._CRASH_HOOK
 
         def crash(p):
-            if p == "multi_journaled":
+            if p == "journaled":
                 raise RuntimeError("injected crash after journal")
 
         sinks._CRASH_HOOK = crash
@@ -1101,6 +1096,32 @@ class TestMultiTableSwap:
         ]
         # per-date rollup: 1+2+10+20 and 3+30 — each exactly once
         assert self._spends(spark, roll_t) == [33.0, 33.0]
+
+    def test_publish_once_recovers_each_target_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One publish over fact + rollup + meta runs the recovery
+        exactly once per target: no second pass over the same tables
+        before staging."""
+        import facebook_ads_bigquery_etl_spark.sinks as sinks
+
+        fact_t, roll_t, meta_t = self._once_paths(tmp_path)
+        f0, r0 = self._gen(spark, 1.0)
+        calls: list[str] = []
+        real_recover = sinks.recover_table
+
+        def counting(path, *args, **kwargs):
+            calls.append(path)
+            return real_recover(path, *args, **kwargs)
+
+        monkeypatch.setattr(sinks, "recover_table", counting)
+        assert sinks.publish_tables_atomic_once(
+            spark, [fact_t, roll_t], lambda: [f0, r0], meta_t, 0
+        )
+        assert sorted(calls) == sorted(
+            sinks._path_ops(p)[1] for p in (fact_t, roll_t, meta_t)
+        )
+        assert self._spends(spark, fact_t) == [1.0, 2.0, 3.0]
 
     @pytest.mark.parametrize("held_slot", [0, 1])
     def test_publish_refuses_cleanly_under_foreign_lease(
@@ -1170,7 +1191,6 @@ class TestMultiTableSwap:
         if backend == "hadoop":
             pytest.skip("py4j gateway is not thread-safe enough for this")
         fact_t, roll_t = self._setup(spark, tmp_path)
-        primary = min(fact_t, roll_t)
         published = []  # generations that publish reported as committed
         errors = []
 
@@ -1189,8 +1209,7 @@ class TestMultiTableSwap:
                     elif op == "compact":
                         sinks.compact_partitions_atomic(spark, fact_t)
                     else:
-                        sinks.recover_multi_swap(primary)
-                        sinks.recover_compaction(fact_t)
+                        sinks.recover_table(fact_t)  # the runs' primary
                 except sinks.CompactionLockHeld:
                     pass  # a live writer holds the table: correct refusal
                 except Exception as e:  # noqa: BLE001 — fail the test below
@@ -1205,9 +1224,8 @@ class TestMultiTableSwap:
             t.join()
         assert not errors, errors
         # converge any debris, then check the cross-table invariant
-        sinks.recover_multi_swap(primary, stale_after_s=0.0)
-        sinks.recover_compaction(fact_t, stale_after_s=0.0)
-        sinks.recover_compaction(roll_t, stale_after_s=0.0)
+        for t in (fact_t, roll_t):
+            sinks.recover_table(t, stale_after_s=0.0)
         fact_spends = self._spends(spark, fact_t)
         gens = {round(s / base, 6) for s, base in zip(fact_spends, [1, 2, 3])}
         assert len(gens) == 1, f"fact holds mixed generations: {fact_spends}"
@@ -1228,6 +1246,8 @@ class TestMultiTableSwap:
         df, _ = self._gen(spark, 1.0)
         with pytest.raises(ValueError, match="local paths"):
             sinks.publish_tables_atomic(spark, [(df, "s3a://b/t")])
+        with pytest.raises(ValueError, match="at least one target"):
+            sinks.publish_tables_atomic(spark, [])
         p = str(tmp_path / "x")
         with pytest.raises(ValueError, match="duplicate"):
             sinks.publish_tables_atomic(spark, [(df, p), (df, p)])
@@ -1241,7 +1261,7 @@ class TestAdvisorR8SwapHardening:
     trash; (b) a peer that displaced the winner's install must detect
     it and restore; (c) the committed-journal write must converge, not
     raise, when a racing recoverer removed the run dir between the
-    isdir check and the write; (d) recover_multi_swap's roll-forward
+    isdir check and the write; (d) recovery's roll-forward
     must heartbeat every lease it acquires."""
 
     def test_hadoop_rename_refuses_existing_destination(self, spark, tmp_path):
@@ -1313,7 +1333,7 @@ class TestAdvisorR8SwapHardening:
 
     @pytest.mark.parametrize("backend", ["local", "hadoop"])
     def test_committed_journal_toctou_converges(self, spark, tmp_path, backend):
-        """A racing recoverer rmtree(run_dir)s between _finish_swap's
+        """A racing recoverer rmtree(run_dir)s between _commit_run's
         isdir check and its committed-journal write: the write fails on
         the missing parent and must be treated as the peer having
         finished (return), not raised."""
@@ -1324,13 +1344,12 @@ class TestAdvisorR8SwapHardening:
         try:
             ops, table = sinks._path_ops(prefix + str(tmp_path / "t"))
             run_dir = ops.join(ops.join(table, "_compact"), "run1")
-            data_dir = ops.join(run_dir, "data")
             part = "date=2025-01-01"
-            ops.mkdirs(ops.join(data_dir, part))
-            ops.mkdirs(ops.join(run_dir, "trash"))
+            ops.mkdirs(ops.join(run_dir, "t0", "data", part))
+            tables = [{"slot": "t0", "path": table, "partitions": [part]}]
             ops.write_json_atomic(
                 ops.join(run_dir, "journal.json"),
-                {"state": "staged", "partitions": [part]},
+                {"state": "staged", "tables": tables},
             )
 
             class PeerWins:
@@ -1343,7 +1362,7 @@ class TestAdvisorR8SwapHardening:
                     ops.write_json_atomic(target, payload)
 
             # must converge silently (no exception), swap done
-            sinks._finish_swap(table, run_dir, [part], PeerWins())
+            sinks._commit_run(run_dir, tables, PeerWins())
             assert ops.isdir(ops.join(table, part))
             assert not ops.isdir(run_dir)
         finally:
@@ -1363,8 +1382,8 @@ class TestAdvisorR8SwapHardening:
         sinks.publish_tables_atomic(spark, [(df, fact_t), (roll, roll_t)])
 
         def crash(point):
-            if point == "multi_journaled":
-                raise RuntimeError("injected crash at multi_journaled")
+            if point == "journaled":
+                raise RuntimeError("injected crash at journaled")
 
         sinks._CRASH_HOOK = crash
         try:
@@ -1384,7 +1403,7 @@ class TestAdvisorR8SwapHardening:
                 return super().__enter__()
 
         monkeypatch.setattr(sinks, "_LeaseHeartbeat", RecordingHB)
-        report = sinks.recover_multi_swap(fact_t, stale_after_s=0.0)
+        report = sinks.recover_table(fact_t, stale_after_s=0.0)
         assert report["rolled_forward"] == 1
         # one heartbeat per acquired lease (both tables, none held)
         assert len(entered) == 2
